@@ -42,7 +42,7 @@ object MemPressureStress {
     val spillMem = new AtomicLong(0L)
     val spillDisk = new AtomicLong(0L)
     // Publish-tail attribution (VERDICT r11 item 6): the delta tail
-    // tags its jobs with CurationRun.DeltaPublishJobGroup, so its
+    // tags its jobs with CurationRun.DeltaPublishJobTag, so its
     // stages' spill splits out of the cadence total — the compose/
     // fingerprint/pack stages are metadata-heavy and the question is
     // whether THEY ever pressure memory at this SF or the dedup
@@ -54,8 +54,8 @@ object MemPressureStress {
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null &&
-            pipeline.CurationRun.DeltaPublishJobGroup ==
-              e.properties.getProperty("spark.jobGroup.id"))
+            Option(e.properties.getProperty("spark.job.tags")).exists(
+              _.split(",").contains(pipeline.CurationRun.DeltaPublishJobTag)))
           e.stageIds.foreach(id => deltaStages.add(id))
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (e.taskMetrics != null) {

@@ -5,7 +5,7 @@ package graft.operators
   * tail back-fills the others): a state-writing pass is a sequence of
   * SMALL actions whose per-job scheduling/AQE floors, not CPU,
   * dominate at batch scale. Branches run on FRESH threads
-  * (SparkContext's InheritableThreadLocal properties — job group,
+  * (SparkContext's InheritableThreadLocal properties — job tags,
   * description — carry over from the calling thread); ALL branches
   * complete before the first failure rethrows, so no branch's
   * in-flight writes race the caller's cleanup.
@@ -19,24 +19,17 @@ package graft.operators
   */
 object DriverOverlap {
   /** Launch ONE branch on a fresh driver thread and return its JOIN
-    * hook — the deferred form of [[overlapped]] for a write whose only
-    * ordering constraint is "complete before X" where X is later than
-    * the next statement (e.g. a state-slice write that must land
-    * before the shared cache releases, but is independent of the
+    * hook, which yields the branch's value — the deferred form of
+    * [[overlapped]] for a write (or an eagerly-materialized frame)
+    * whose only ordering constraint is "complete before X" where X is
+    * later than the next statement (e.g. a state-slice write that must
+    * land before the shared cache releases, but is independent of the
     * stages in between). Same caller rules: the branch must not race a
     * cold shared parent — materialize it first. The join hook rethrows
     * the branch's failure; call it on every path that needs the write
     * durable (a caller failure path that skips the join only abandons
     * an in-flight write into a dir the failed run already makes
     * unreadable). */
-  def launch(branch: () => Unit): () => Unit = {
-    val join = launchValue(branch)
-    () => { join(); () }
-  }
-
-  /** [[launch]] returning the branch's value from the join hook —
-    * for eagerly-materialized frames (a checkpoint) a later stage
-    * consumes. Same caller rules. */
   def launchValue[A](branch: () => A): () => A = {
     val t = new java.util.concurrent.FutureTask[A](
       new java.util.concurrent.Callable[A] { def call(): A = branch() })
@@ -47,23 +40,19 @@ object DriverOverlap {
     }
   }
 
+  /** Run EVERY hook, then rethrow the first failure — so a failing
+    * join or release hook cannot skip the ones after it. */
+  def runAll(hooks: Seq[() => Unit]): Unit =
+    hooks.flatMap(h => scala.util.Try(h()).failed.toOption)
+      .headOption.foreach(e => throw e)
+
+  /** Run `main` on this thread with `branches` overlapped on fresh
+    * driver threads; every branch joins before anything rethrows, and
+    * `main`'s own failure wins over a branch's. */
   def overlapped[A](branches: Seq[() => Unit])(main: => A): A = {
-    val tasks = branches.map { b =>
-      val t = new java.util.concurrent.FutureTask[Unit](
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = b() })
-      val th = new Thread(t, "graft-state-branch")
-      th.setDaemon(true); th.start(); t
-    }
-    val mainRes = scala.util.Try(main)
-    val branchErr = tasks.flatMap { t =>
-      scala.util.Try(t.get()).failed.toOption.map {
-        case e: java.util.concurrent.ExecutionException => e.getCause
-        case e => e
-      }
-    }.headOption
-    mainRes match {
-      case scala.util.Success(r) => branchErr.foreach(e => throw e); r
-      case scala.util.Failure(e) => throw e
-    }
+    val joins = branches.map(b => launchValue(b))
+    val res = scala.util.Try(main)
+    runAll((() => { res.get; () }) +: joins)
+    res.get
   }
 }

@@ -43,35 +43,6 @@ import graft.sources.Sinks
   */
 object CurationRun {
 
-  /** Opt-in cadence phase timing (`SPARK_GRAFT_CADENCE_PROF=1`): one
-    * line per labeled phase on stdout — the profiling hook that found
-    * the r11 publish-tail regression. Zero cost when unset. */
-  private val profOn = sys.env.get("SPARK_GRAFT_CADENCE_PROF").contains("1")
-  private def prof[A](label: String)(body: => A): A =
-    if (!profOn) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"  [cadence-prof] $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
-
-  /** Overlap independent state-write branches on driver threads (guide
-    * §2.6 — submit independent jobs concurrently so each job's stage
-    * tail back-fills the others): a cadence pass is a sequence of many
-    * SMALL actions whose per-job scheduling/AQE floors, not CPU,
-    * dominate at batch scale. Branches run on FRESH threads
-    * (SparkContext's InheritableThreadLocal properties — job group,
-    * description — carry over from this thread); ALL branches complete
-    * before the first failure rethrows, so no branch's in-flight
-    * writes race the caller's cleanup. The r10 experiment measured
-    * this neutral when the independent groups were 2-3.5 s of a 13 s
-    * pass; re-landed in r14 now that the r11-r13 state families
-    * (line/span/retrieval/ANN/publish) make the groups most of the
-    * pass — same-session A/B in OPTIMIZATION_r14.md. */
-  private def overlapped[A](branches: Seq[() => Unit])(main: => A): A =
-    graft.operators.DriverOverlap.overlapped(branches)(main)
-
   /** Drive the full pass over a testdata SF dir (benchmark = the q47
     * split: every 97th doc):
     * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.pipeline.CurationRun"` */
@@ -125,18 +96,16 @@ object CurationRun {
     * COLUMN (spec-pinned bit-equal to the relational scoring path),
     * so the gate is a filter fused into the scan — no explode, no
     * join, no shuffle. Docs below `minScore` drop; returns the
-    * filtered frame + survivor count (-1 when no classifier was
-    * supplied). */
+    * filtered frame (the input when no classifier was supplied). */
   private def classifierStage(gated: DataFrame,
       classifier: Option[(DataFrame, Int)],
-      minScore: Double): (DataFrame, Long) = classifier match {
-    case None => (gated, -1L)
+      minScore: Double): DataFrame = classifier match {
+    case None => gated
     case Some((weights, buckets)) =>
       import graft.functions.TextFunctions.tokens
       val model = QualityClassifier.weightsModel(weights, buckets)
-      val keep = gated.where(
+      gated.where(
         QualityClassifier.scoreCol(tokens(col("text")), model) >= minScore)
-      (keep, keep.count())
   }
 
   /** Embedding-space dedup stage (SemDeDup, q70/q75) over a kept
@@ -161,10 +130,7 @@ object CurationRun {
       semMaxCellSize: Int): (DataFrame, Long, () => Unit) = embeddings match {
     case None => (kept, -1L, () => ())
     case Some(emb) =>
-      val vecs = kept.select(col("doc_id"))
-        .join(emb.select(col("vec_id"), col("embedding")),
-          col("doc_id") === col("vec_id"))
-        .select(col("vec_id"), col("embedding"))
+      val vecs = embeddedVecs(kept, emb)
       // The disposition feeds the audit count and then every output
       // action's anti-join — persist the compact (doc_id) drop list,
       // not the kept corpus, and hand its release to the caller (the
@@ -305,7 +271,7 @@ object CurationRun {
       stateDir: String): (VectorSim.PqModel, Seq[Array[Double]], DataFrame) = {
     val (m, cen) = VectorSim.annModelFromFrame(
       spark.read.parquet(s"$stateDir/ann_model"))
-    val codes = readSlices(spark, StateLayout.readLineage(stateDir), "ann_codes_batch")
+    val codes = StateLayout.readSlices(spark, StateLayout.readLineage(stateDir), "ann_codes_batch")
       .withColumn("state_version", lit(stateDir))
       .persist()
     (m, cen, codes)
@@ -408,13 +374,12 @@ object CurationRun {
 
   /** A stage's deferred-audit handle (VERDICT r09 item 3): the output
     * frame, the AUDIT frame whose count joins the run's single folded
-    * stats action instead of paying its own job, and two release
-    * hooks — `afterLand` frees the token-scale intermediates (grams /
-    * lines) once the landed decon write has materialized the output
-    * cache; `afterAudit` frees the compact output cache after the
-    * folded count has read it. */
+    * stats action instead of paying its own job, and the release hook
+    * `afterLand`, which joins the stage's state-slice write and frees
+    * the token-scale intermediates (grams / lines) once the landed
+    * decon write has materialized the output. */
   private final case class StagedAudit(frame: DataFrame, audit: DataFrame,
-    afterLand: () => Unit, afterAudit: () => Unit)
+    afterLand: () => Unit)
 
   /** Shared span-state stage: clean `deconRaw` against history+batch
     * gram counts, land this batch's counts slice, return the cleaned
@@ -438,8 +403,7 @@ object CurationRun {
     // event bus re-renders) the ENTIRE prep+decon+span chain behind it,
     // measured as 8 MB plan strings per action on the cadence runs.
     // Truncating lineage here pays the chain's optimization once;
-    // blocks release via ContextCleaner (afterAudit keeps its hook for
-    // the no-op unpersist — harmless on a checkpointed frame).
+    // blocks release via ContextCleaner.
     // The checkpoint runs FIRST (it materializes the shared raw/gram
     // caches), then the batch's state-slice write — independent of
     // everything until the caches release — lands on a driver thread
@@ -450,11 +414,10 @@ object CurationRun {
       .select(col("doc_id"), col("clean_text").as("text"),
         col("quality_score"), col("n_removed"))
       .localCheckpoint(true)
-    val joinSlice = DriverOverlap.launch(() =>
+    val joinSlice = DriverOverlap.launchValue(() =>
       StateLayout.writeBucketed(slice, s"$stateOutDir/span_grams_batch", "h"))
     StagedAudit(withQ.drop("n_removed"), withQ.where(col("n_removed") > 0),
-      () => { joinSlice(); gramsRel(); raw.unpersist(); () },
-      () => ())
+      () => try joinSlice() finally { gramsRel(); raw.unpersist() })
   }
 
   private def spanStateActive(stateInDir: String): Boolean =
@@ -487,11 +450,10 @@ object CurationRun {
     val out = cleaned
       .select(col("doc_id"), col("clean_text").as("text"), col("n_removed"))
       .localCheckpoint(true)
-    val joinSlice = DriverOverlap.launch(() =>
+    val joinSlice = DriverOverlap.launchValue(() =>
       StateLayout.writeBucketed(slice, s"$stateOutDir/line_df_batch", "h"))
     StagedAudit(out.drop("n_removed"), out.where(col("n_removed") > 0),
-      () => { joinSlice(); linesRel(); raw.unpersist(); () },
-      () => ())
+      () => try joinSlice() finally { linesRel(); raw.unpersist() })
   }
 
   private def lineStateActive(stateInDir: String): Boolean =
@@ -597,14 +559,6 @@ object CurationRun {
   private val NumHashes = 32
   private val Bands = 16
 
-  /** Union one artifact's batch slices along a state lineage —
-    * layout-aware full scan (see [[StateLayout.readSlices]]; readers
-    * that can derive a batch key set use
-    * [[StateLayout.readSlicesPruned]] instead, VERDICT r09 item 1). */
-  private def readSlices(spark: org.apache.spark.sql.SparkSession,
-      lineage: Seq[String], name: String): DataFrame =
-    StateLayout.readSlices(spark, lineage, name)
-
   /** History banding rows along a lineage: the `bands_batch` slices
     * where they exist — pruned to `pruneTo`'s bucket probes when given
     * — DERIVED from the signature slices for lineage dirs written
@@ -624,7 +578,7 @@ object CurationRun {
        })) ++
       (if (legacy.isEmpty) Nil
        else Seq(TextDedup.bandFrame(
-         readSlices(spark, legacy, "signatures_batch"), NumHashes, Bands)))
+         StateLayout.readSlices(spark, legacy, "signatures_batch"), NumHashes, Bands)))
     require(parts.nonEmpty, "composedBands needs a non-empty lineage")
     parts.reduce(_ unionByName _)
   }
@@ -645,7 +599,7 @@ object CurationRun {
       .join(quality.where(col("quality_score") >= minQuality), "doc_id")
     // Model-based gate under pre-trained weights: per-doc, so the
     // cadence equality pin extends through it (fused, not counted).
-    val (clsGated, _) = classifierStage(gated, classifier, minClassifierScore)
+    val clsGated = classifierStage(gated, classifier, minClassifierScore)
     clsGated.join(
       TextDedup.contaminated(clsGated, benchmark, "doc_id", "text", n = 3)
         .where(col("n_contaminated_shingles") >= minContaminatedShingles)
@@ -660,16 +614,11 @@ object CurationRun {
     * per-action cost that was the largest slice of q146. Frames over
     * persisted caches / landed parquet count from cache / footers. */
   private def foldCounts(stats: Seq[(String, DataFrame)]): Map[String, Long] =
-    if (profOn)
-      // Profiling form: one action per stat so the phase log attributes
-      // the cost (the folded single-action form hides which frame pays).
-      stats.map { case (k, df) => k -> prof(s"    count:$k")(df.count()) }.toMap
-    else
-      stats.map { case (k, df) =>
-        df.agg(count(lit(1)).cast("long").as("n"))
-          .select(lit(k).as("k"), col("n"))
-      }.reduce(_ unionByName _)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    stats.map { case (k, df) =>
+      df.agg(count(lit(1)).cast("long").as("n"))
+        .select(lit(k).as("k"), col("n"))
+    }.reduce(_ unionByName _)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** Language-stratified sample + curated/packed sinks over a kept
     * frame — the output tail of both cadences. Returns the LANDED
@@ -682,9 +631,7 @@ object CurationRun {
     * shards forward as pure IO; row sets are unchanged from the flat
     * layout). */
   private def landOutputs(kept: DataFrame, outDir: String,
-      fractions: Map[String, Double], defaultFraction: Double,
-      packBudget: Long, publishSpan: Long,
-      carrier: PublishCarrier = PublishCarrier.Posix): (DataFrame, DataFrame) = {
+      cfg: PublishState.Config, carrier: PublishCarrier): (DataFrame, DataFrame) = {
     // A re-publish into a dir holding a stale completion marker must
     // retract it BEFORE the first write (round-13 review finding #1).
     PublishState.clearComplete(outDir, carrier)
@@ -693,15 +640,14 @@ object CurationRun {
       .select(col("doc_id"), col("detected_lang"))
     val sampled = DataMix.stratifiedSample(
       kept.join(lang, "doc_id"), "doc_id", "detected_lang",
-      fractions, defaultFraction)
+      cfg.fractions, cfg.defaultFraction)
     import graft.functions.TextFunctions.tokens
-    // LONG like PublishState.Config.shardOf — the full and delta
-    // publish tails MUST write the same shard width: a mixed dir
-    // (int files hard-link-carried from a full publish beside long
-    // files from a delta re-pack) breaks whole-dir parquet reads
-    // with a schema-convert error, and the int form wraps above
-    // 2^31 spans (ADVICE r11; round-12 review finding #1).
-    val shardOf = floor(col("doc_id") / lit(publishSpan)).cast("long")
+    // PublishState.Config.shardOf (LONG) — the full and delta publish
+    // tails MUST write the same shard width: a mixed dir (int files
+    // hard-link-carried from a full publish beside long files from a
+    // delta re-pack) breaks whole-dir parquet reads with a
+    // schema-convert error (ADVICE r11; round-12 review finding #1).
+    val shardOf = cfg.shardOf(col("doc_id"))
     val curated = sampled
       .select(col("doc_id"), col("text"), col("detected_lang"), col("quality_score"),
         shardOf.as("shard"))
@@ -718,7 +664,7 @@ object CurationRun {
     val packed = DataMix.packSequenceContentsBy(
       landedCurated.select(col("doc_id"), col("text"),
         size(tokens(col("text"))).cast("long").as("n_tokens")),
-      "doc_id", "n_tokens", "text", budget = packBudget, shardOf = shardOf)
+      "doc_id", "n_tokens", "text", budget = cfg.packBudget, shardOf = shardOf)
     PublishState.writeSharded(packed, s"$outDir/packed",
       keepShardInContent = true, carrier = carrier)
     // Writer-side validation record (q72/q107): per-shard totals +
@@ -729,7 +675,7 @@ object CurationRun {
     val landedBins = spark.read.parquet(s"$outDir/packed")
     Sinks.overwriteParquet(
       DataMix.shardManifest(landedBins)
-        .join(DataMix.packingEfficiency(landedBins, packBudget)
+        .join(DataMix.packingEfficiency(landedBins, cfg.packBudget)
           .select(col("shard"), col("capacity_tokens"), col("fill_ratio")),
           Seq("shard")),
       s"$outDir/manifest", numFiles = 1)
@@ -755,18 +701,14 @@ object CurationRun {
     // ANN model/codes trainers all re-scan this join — one compact
     // (id, vector) cache serves ~20 trainer actions instead of
     // re-paying the decon-join per pass (VERDICT r09 item 3).
-    val vecs = deconS.select(col("doc_id"))
-      .join(emb.select(col("vec_id"), col("embedding")),
-        col("doc_id") === col("vec_id"))
-      .select(col("vec_id"), col("embedding"))
-      .persist()
+    val vecs = embeddedVecs(deconS, emb).persist()
     try {
       // Frozen quantizer: trained on the init corpus (or supplied,
       // e.g. by a seeded scratch replay / a rebase); becomes state.
-      val cen = prof("init:sem-train")(semCentroidsIn match {
+      val cen = semCentroidsIn match {
         case Some(p) => readSemCentroids(spark, p)
         case None => VectorSim.kmeansCentroids(vecs, semClusters, semIters)
-      })
+      }
       writeSemCentroids(spark, stateOutDir, cen)
       // The salt is part of the frozen quantizer contract — record
       // it in state so incrementals can't drift from init's value.
@@ -782,10 +724,10 @@ object CurationRun {
         Sinks.overwriteParquet(VectorSim.quantizerFitSlice(vecs, cen),
           s"$stateOutDir/sem_fit_batch", numFiles = 1)
         val cellsS = StateLayout.readSlice(spark, s"$stateOutDir/sem_cells_batch")
-        prof("init:sem-clusters")(Sinks.overwriteParquet(
+        Sinks.overwriteParquet(
           TextDedup.connectedComponents(VectorSim.semanticPairsIncremental(
             cellsS, emb, cellsS.select(col("vec_id")), semThreshold)),
-          s"$stateOutDir/sem_clusters", numFiles = 1))
+          s"$stateOutDir/sem_clusters", numFiles = 1)
       }
       // ANN index state (VERDICT r07 item 3): train the frozen model
       // on the same cached embedded decon vectors. The two write
@@ -796,10 +738,10 @@ object CurationRun {
       // first-materialization would duplicate its compute — sequential.
       def annWrites(): Unit =
         if (annState)
-          prof("init:ann")(writeAnnInit(spark, stateOutDir, vecs,
-            annSubspaces, annCodewords, annClusters, annIters))
+          writeAnnInit(spark, stateOutDir, vecs,
+            annSubspaces, annCodewords, annClusters, annIters)
       if (semCentroidsIn.isEmpty)
-        overlapped(Seq(() => annWrites()))(semWrites())
+        DriverOverlap.overlapped(Seq(() => annWrites()))(semWrites())
       else { semWrites(); annWrites() }
     } finally vecs.unpersist()
   }
@@ -812,6 +754,173 @@ object CurationRun {
       TextDedup.dedupSurvivors(clusters,
           decon.select(col("doc_id"), col("quality_score")), "quality_score")
         .select(col("canonical_id"), col("survivor_id")))
+
+  /** A landed batch front: the read-back decon slice and the span/line
+    * stages' deferred audits. */
+  private final case class BatchFront(decon: DataFrame,
+      span: Option[StagedAudit], line: Option[StagedAudit]) {
+    def audits: Seq[(String, DataFrame)] =
+      span.map("span" -> _.audit).toSeq ++ line.map("line" -> _.audit)
+  }
+
+  /** The landed batch front both cadences share: the line-df stage (on
+    * RAW text, see [[lineStateStage]]), [[prepBatch]], the optional
+    * exact-recrawl gate, the span-df stage, the bucketed `decon_batch`
+    * slice write, the stages' token-scale releases, and the slice's
+    * read-back. `history` is the lineage the df counts and the gate
+    * read — empty at init, which cleans against the batch's own
+    * counts (the from-scratch df). */
+  private def batchFront(docs: DataFrame, benchmark: DataFrame,
+      stateOutDir: String, history: Seq[String], lineOn: Boolean,
+      spanOn: Boolean, exactGate: Boolean, minQuality: Double,
+      minContaminatedShingles: Int, classifier: Option[(DataFrame, Int)],
+      minClassifierScore: Double, spanK: Int, spanMinDf: Int,
+      lineMinDf: Int): BatchFront = {
+    val spark = docs.sparkSession
+    // History df counts READ PRUNED to the buckets the batch's keys hit
+    // (VERDICT r09 item 1) — state IO per increment tracks the batch
+    // like the compute already does.
+    def historyOf(name: String): DataFrame => DataFrame =
+      if (history.isEmpty) _ => emptyGramCounts(spark)
+      else bc => StateLayout.readSlicesPruned(spark, history, name, "h",
+        bc.select(col("h")))
+    val lineStaged =
+      if (lineOn) Some(lineStateStage(docs, historyOf("line_df_batch"),
+        stateOutDir, lineMinDf))
+      else None
+    val deconNew = prepBatch(lineStaged.map(_.frame).getOrElse(docs),
+      benchmark, minQuality, minContaminatedShingles, classifier,
+      minClassifierScore)
+    // Optional exact-recrawl gate (the Bloom route, q91's shape): drop
+    // batch docs whose normalized content ALREADY exists in state
+    // before they pay the shingle/signature/LSH front. History keys
+    // come from the COMPACT hash_batch slices (16 bytes/doc), not from
+    // re-hashing corpus text. Output-preserving under monotonic ingest
+    // ids (batch ids > history ids): an exact dup has identical
+    // shingles, so LSH links it to its history twin, identical quality
+    // score, and the lower-id twin wins the survivor tie-break — the
+    // gate drops exactly the docs survivor selection would drop
+    // (BloomGateCurationSpec pins all three cadences equal).
+    val deconRouted =
+      if (!exactGate) deconNew
+      else {
+        // The batch's hashed frame persists FIRST: the pruned history
+        // read collects the batch's bucket set (materializing this
+        // cache), so deriving keys never re-runs the prep front, and
+        // the history scan touches only the buckets those keys hit
+        // (VERDICT r09 item 1). Pruned keys are a SUPERSET of the
+        // batch's true matches, so routing and the exact confirm join
+        // stay output-identical.
+        val hashedBatch = deconNew
+          .withColumn("content_hash", TextDedup.contentHash(col("text")))
+          .persist()
+        val histKeys = StateLayout.readSlicesPruned(spark, history,
+          "hash_batch", "content_hash", hashedBatch.select(col("content_hash")))
+          .select(col("content_hash")).distinct().persist()
+        val nHist = histKeys.count()
+        val novel = TextDedup.bloomGatedNewByKeys(histKeys, hashedBatch,
+          "content_hash", nHist)
+          .drop("content_hash")
+        CacheLease.releaseAfterAction(novel) { () =>
+          histKeys.unpersist(); hashedBatch.unpersist(); ()
+        }
+      }
+    val spanStaged =
+      if (spanOn) Some(spanStateStage(deconRouted, historyOf("span_grams_batch"),
+        stateOutDir, spanK, spanMinDf))
+      else None
+    // Bucketed by doc_id (VERDICT r10 item 1): the delta publisher's
+    // rare re-surfacing-doc lookup reads decon text PRUNED to those
+    // ids' buckets instead of scanning the composed corpus.
+    StateLayout.writeBucketed(spanStaged.map(_.frame).getOrElse(deconRouted),
+      s"$stateOutDir/decon_batch", "doc_id", buckets = 8)
+    // The decon write materialized both stages' compact outputs; their
+    // token-scale intermediates (lines/grams) release NOW — every hook
+    // runs even when another's slice write failed — while the audit
+    // frames stay for the run's one folded stats action.
+    DriverOverlap.runAll(spanStaged.map(_.afterLand).toSeq ++
+      lineStaged.map(_.afterLand))
+    BatchFront(StateLayout.readSlice(spark, s"$stateOutDir/decon_batch"),
+      spanStaged, lineStaged)
+  }
+
+  /** Land the batch's near-dup slices off its landed decon slice and
+    * return the read-back index and signatures. The index lands
+    * bucketed BY DOC ID (VERDICT r09 item 1 extended to the dedup
+    * front): increments verify candidate pairs against history shingle
+    * sets read pruned to the candidate docs' buckets. Banding rows land
+    * as DERIVED state bucketed BY BAND KEY: an increment's candidate
+    * join reads only the history band rows in buckets its own band keys
+    * hash to, instead of re-banding the corpus signatures every week. */
+  private def writeNearDupSlices(deconS: DataFrame, stateOutDir: String,
+      sigFiles: Int): (graft.operators.ShingleIndex, DataFrame) = {
+    val spark = deconS.sparkSession
+    val idx = TextDedup.buildIndex(deconS, "doc_id", "text", n = 3, bits = 32)
+    StateLayout.writeBucketed(idx.df, s"$stateOutDir/index_batch", "doc_id")
+    val idxS = TextDedup.indexFromFrame(
+      StateLayout.readSlice(spark, s"$stateOutDir/index_batch"), bits = 32)
+    Sinks.overwriteParquet(TextDedup.minhashSignatures(idxS, NumHashes),
+      s"$stateOutDir/signatures_batch", numFiles = sigFiles)
+    val sigS = spark.read.parquet(s"$stateOutDir/signatures_batch")
+    StateLayout.writeBucketed(TextDedup.bandFrame(sigS, NumHashes, Bands),
+      s"$stateOutDir/bands_batch", "band")
+    (idxS, sigS)
+  }
+
+  /** The FULL publish tail — init's, and an increment's whenever the
+    * delta publish cannot run: survivor keep set over `decon`, the
+    * semantic keep (frozen-quantizer labels when `semStateOn`, else
+    * the eager per-run stage), the output sinks OVERLAPPED with the
+    * publish state (guide §2.6: both hang off the same persisted
+    * semFinal/kept frames and neither reads the other's output), the
+    * completion marker, and the run's ONE folded audit action
+    * (VERDICT r09 item 3). Publish state (VERDICT r10 item 1) is
+    * (re)built whenever later increments can maintain membership
+    * incrementally — no embeddings, or the frozen-quantizer semantic
+    * state (the eager per-run semantic stage re-clusters the composed
+    * corpus weekly, so its disposition is not locally recomputable);
+    * this is also the upgrade path for pre-publish-state lineages and
+    * the recovery path after a config change. */
+  private def fullPublishTail(input: DataFrame, decon: DataFrame,
+      clustersS: DataFrame, front: BatchFront, semStateOn: Boolean,
+      embeddings: Option[DataFrame], semClusters: Int, semIters: Int,
+      semThreshold: Double, semMaxCellSize: Int, cfg: PublishState.Config,
+      stateOutDir: String, outDir: String, v: Long,
+      carrier: PublishCarrier): Stats = {
+    val spark = decon.sparkSession
+    def semLabels = spark.read.parquet(s"$stateOutDir/sem_clusters")
+    val kept = keepFromClusters(decon, clustersS).persist()
+    val (semFinal, semDroppedEager, semRelease) =
+      if (semStateOn) {
+        val (out, rel) = semanticKeepFilter(kept, semLabels)
+        (out, -1L, rel)
+      } else semanticStage(kept, embeddings,
+        semClusters, semIters, semThreshold, semMaxCellSize)
+    val (landedCurated, landedBins) = DriverOverlap.overlapped(Seq(
+      () => if (embeddings.isEmpty || semStateOn)
+        writePublishState(spark, decon, kept, semFinal,
+          if (semStateOn) Some(semLabels) else None,
+          cfg, stateOutDir, outDir, v, carrier)
+    ))(landOutputs(semFinal, outDir, cfg, carrier))
+    // Completion marker LAST — after every publish artifact AND the
+    // publish state (VERDICT r12 item 2).
+    PublishState.markComplete(outDir, carrier)
+    // Stage caches release only after the folded action read them.
+    val c = foldCounts(Seq(
+      "input" -> input, "decon" -> decon, "kept" -> kept,
+      "sampled" -> landedCurated, "bins" -> landedBins) ++
+      front.audits ++
+      (if (semStateOn) Seq("semfinal" -> semFinal) else Nil))
+    semRelease(); kept.unpersist()
+    Stats(input = c("input"), gated = -1L, modelGated = -1L,
+      decontaminated = c("decon"),
+      spanCleaned = front.span.fold(-1L)(_ => c("span")),
+      kept = c("kept"),
+      semDropped =
+        if (semStateOn) c("kept") - c("semfinal") else semDroppedEager,
+      sampled = c("sampled"), bins = c("bins"),
+      lineCleaned = front.line.fold(-1L)(_ => c("line")))
+  }
 
   /** From-scratch run that WRITES the weekly state for later
     * [[runIncremental]] calls. Outputs match [[run]] semantics. The
@@ -838,35 +947,12 @@ object CurationRun {
       retrievalState: Boolean = false,
       carrier: PublishCarrier = PublishCarrier.Posix): Stats = {
     val spark = docs.sparkSession
-    // Line-df state (opt-in, on RAW text before normalization — see
-    // lineStateStage): init cleans against its own counts.
-    val lineStaged =
-      if (lineState) Some(prof("init:line-stage")(
-        lineStateStage(docs, _ => emptyGramCounts(spark),
-          stateOutDir, lineMinDf)))
-      else None
-    val deconRaw = prof("init:prep")(prepBatch(
-      lineStaged.map(_.frame).getOrElse(docs),
-      benchmark, minQuality,
-      minContaminatedShingles, classifier, minClassifierScore))
-    // Span-df state (opt-in): init cleans against its own counts (an
-    // empty history is the from-scratch df), landing cleaned text.
-    val spanStaged =
-      if (spanState) Some(prof("init:span-stage")(
-        spanStateStage(deconRaw, _ => emptyGramCounts(spark),
-          stateOutDir, spanK, spanMinDf)))
-      else None
-    // Bucketed by doc_id (VERDICT r10 item 1): the delta publisher's
-    // rare re-surfacing-doc lookup reads decon text PRUNED to those
-    // ids' buckets instead of scanning the composed corpus.
-    prof("init:decon-write")(
-      StateLayout.writeBucketed(spanStaged.map(_.frame).getOrElse(deconRaw),
-        s"$stateOutDir/decon_batch", "doc_id", buckets = 8))
-    // The decon write materialized both stages' compact output caches;
-    // their token-scale intermediates (lines/grams) release NOW, the
-    // audit caches stay for the run's one folded stats action.
-    spanStaged.foreach(_.afterLand()); lineStaged.foreach(_.afterLand())
-    val deconS = StateLayout.readSlice(spark, s"$stateOutDir/decon_batch")
+    // Line/span df state (opt-in): init cleans against its own counts.
+    val front = batchFront(docs, benchmark, stateOutDir, history = Nil,
+      lineState, spanState, exactGate = false, minQuality,
+      minContaminatedShingles, classifier, minClassifierScore, spanK,
+      spanMinDf, lineMinDf)
+    val deconS = front.decon
     // Retrieval-state family (VERDICT r12 item 6): opt-in BM25 + LM
     // count states over the landed DECON corpus (append-only across
     // batches — the disjoint-id contract the weekly-shifting curated
@@ -883,113 +969,40 @@ object CurationRun {
     // (index -> signatures -> bands -> pairs -> labels). Every branch
     // writes its own artifact dir; the one cross-branch consumer
     // (sem_clusters -> semanticKeepFilter) runs after the join.
-    val clustersS = overlapped(Seq(
-      () => if (retrievalState) prof("init:retrieval-state") {
+    val clustersS = DriverOverlap.overlapped(Seq(
+      () => if (retrievalState) {
         val rdocs = deconS.select(col("doc_id"), col("text"))
         Bm25State.writeInit(rdocs, "doc_id", "text", s"$stateOutDir/bm25",
           recordIds = true)
         LmState.writeInit(rdocs, "text", s"$stateOutDir/lm",
           recordIds = true)
       },
-      () => prof("init:hash-write")(StateLayout.writeBucketed(
+      () => StateLayout.writeBucketed(
         deconS.select(col("doc_id"),
           TextDedup.contentHash(col("text")).as("content_hash")),
-        s"$stateOutDir/hash_batch", "content_hash")),
+        s"$stateOutDir/hash_batch", "content_hash"),
       () =>
         if (doSemState)
-          prof("init:sem-state")(semInitTrainWrites(spark, stateOutDir,
+          semInitTrainWrites(spark, stateOutDir,
             deconS, embeddings.get, semClusters, semIters, semThreshold,
             semCentroidsIn, semSalt, annState, annSubspaces, annCodewords,
-            annClusters, annIters))
+            annClusters, annIters)
         else if (annState && embeddings.isDefined)
-          prof("init:ann")(writeAnnInit(spark, stateOutDir,
+          writeAnnInit(spark, stateOutDir,
             embeddedVecs(deconS, embeddings.get),
-            annSubspaces, annCodewords, annClusters, annIters))
+            annSubspaces, annCodewords, annClusters, annIters)
     )) {
-      val idx = prof("init:index")(
-        TextDedup.buildIndex(deconS, "doc_id", "text", n = 3, bits = 32))
-      // The index slice lands bucketed BY DOC ID (VERDICT r09 item 1
-      // extended to the dedup front): later increments verify candidate
-      // pairs against history shingle sets read pruned to the candidate
-      // docs' buckets instead of scanning the corpus index weekly.
-      prof("init:index-write")(
-        StateLayout.writeBucketed(idx.df, s"$stateOutDir/index_batch", "doc_id"))
-      val idxS = TextDedup.indexFromFrame(
-        StateLayout.readSlice(spark, s"$stateOutDir/index_batch"), bits = 32)
-      val sig = TextDedup.minhashSignatures(idxS, NumHashes)
-      prof("init:sig-write")(
-        Sinks.overwriteParquet(sig, s"$stateOutDir/signatures_batch", numFiles = 4))
-      val sigS = spark.read.parquet(s"$stateOutDir/signatures_batch")
-      // Banding rows land as DERIVED state bucketed BY BAND KEY: an
-      // increment's candidate join reads only the history band rows in
-      // buckets its own band keys hash to — batch-proportional IO —
-      // instead of re-banding the corpus signatures every week.
-      prof("init:bands-write")(
-        StateLayout.writeBucketed(TextDedup.bandFrame(sigS, NumHashes, Bands),
-          s"$stateOutDir/bands_batch", "band"))
-      val clusters = prof("init:pairs+cc")(TextDedup.connectedComponents(
-        TextDedup.minhashLshPairs(idxS, sigS, dedupThreshold, NumHashes, Bands)))
-      prof("init:clusters-write")(
-        Sinks.overwriteParquet(clusters, s"$stateOutDir/clusters", numFiles = 1))
+      val (idxS, sigS) = writeNearDupSlices(deconS, stateOutDir, sigFiles = 4)
+      val clusters = TextDedup.connectedComponents(
+        TextDedup.minhashLshPairs(idxS, sigS, dedupThreshold, NumHashes, Bands))
+      Sinks.overwriteParquet(clusters, s"$stateOutDir/clusters", numFiles = 1)
       spark.read.parquet(s"$stateOutDir/clusters")
     }
     StateLayout.writeLineage(stateOutDir, Seq(stateOutDir))
-    val kept = prof("init:kept")(keepFromClusters(deconS, clustersS).persist())
-    val (semFinal, semStateOn, semDroppedEager, semRelease) =
-      if (doSemState) {
-        val (out, rel) = semanticKeepFilter(kept,
-          spark.read.parquet(s"$stateOutDir/sem_clusters"))
-        (out, true, -1L, rel)
-      } else {
-        val (f, n, r) = semanticStage(kept, embeddings,
-          semClusters, semIters, semThreshold, semMaxCellSize)
-        (f, false, n, r)
-      }
-    // Output tail OVERLAPPED with the publish state (guide §2.6): the
-    // sharded curated/packed/manifest sinks land in outDir while the
-    // ledger/fingerprints/totals/meta land in stateOutDir — both hang
-    // off the same persisted semFinal/kept frames and neither reads
-    // the other's output. Publish state (VERDICT r10 item 1) is
-    // written whenever later increments can maintain membership
-    // incrementally — no embeddings, or the frozen-quantizer semantic
-    // state (the eager per-run semantic stage re-clusters the composed
-    // corpus weekly, so its disposition is not locally recomputable).
-    val (landedCurated, landedBins) = overlapped(Seq(
-      () => if (embeddings.isEmpty || semStateOn)
-        prof("init:publish-state")(writePublishState(spark, deconS, kept,
-          semFinal,
-          if (semStateOn)
-            Some(spark.read.parquet(s"$stateOutDir/sem_clusters"))
-          else None,
-          PublishState.Config(fractions, defaultFraction,
-            packBudget, publishSpan),
-          stateOutDir, outDir, v = 0L, carrier))
-    )) {
-      prof("init:landOutputs")(landOutputs(semFinal, outDir,
-        fractions, defaultFraction, packBudget, publishSpan, carrier))
-    }
-    // Completion marker LAST — after every publish artifact AND the
-    // publish state (VERDICT r12 item 2).
-    PublishState.markComplete(outDir, carrier)
-    // The run's ONE audit action (VERDICT r09 item 3): every stat
-    // folds into a single union'd count job over caches and landed
-    // parquet; stage caches release only after this read them.
-    val c = foldCounts(Seq(
-      "input" -> docs, "decon" -> deconS, "kept" -> kept,
-      "sampled" -> landedCurated, "bins" -> landedBins) ++
-      spanStaged.map(s => "span" -> s.audit) ++
-      lineStaged.map(s => "line" -> s.audit) ++
-      (if (semStateOn) Seq("semfinal" -> semFinal) else Nil))
-    spanStaged.foreach(_.afterAudit()); lineStaged.foreach(_.afterAudit())
-    semRelease(); kept.unpersist()
-    Stats(input = c("input"), gated = -1L, modelGated = -1L,
-      decontaminated = c("decon"),
-      spanCleaned = spanStaged.fold(-1L)(_ => c("span")),
-      kept = c("kept"),
-      semDropped =
-        if (semStateOn) c("kept") - c("semfinal") else semDroppedEager,
-      sampled = c("sampled"), bins = c("bins"),
-      lineCleaned = lineStaged.fold(-1L)(_ => c("line")))
+    fullPublishTail(docs, deconS, clustersS, front, doSemState, embeddings,
+      semClusters, semIters, semThreshold, semMaxCellSize,
+      PublishState.Config(fractions, defaultFraction, packBudget, publishSpan),
+      stateOutDir, outDir, v = 0L, carrier)
   }
 
   /** Weekly incremental run: a NEW raw batch (doc ids disjoint from
@@ -1023,84 +1036,17 @@ object CurationRun {
     // joins — those reads go through the pruned-or-degrade layout
     // below (bands_batch + the doc-keyed index prune) instead of
     // unconditional full scans.
-    val deconOld = readSlices(spark, lineage, "decon_batch")
+    val deconOld = StateLayout.readSlices(spark, lineage, "decon_batch")
     val clustersOld = spark.read.parquet(s"$stateInDir/clusters")
-
-    // Line-df state (auto-detected, on RAW text before normalization —
-    // see lineStateStage): clean the batch against the composed line
-    // counts, land its slice. The history READ prunes to the buckets
-    // the batch's line keys hit (VERDICT r09 item 1) — state IO per
-    // increment tracks the batch like the compute already does.
-    val lineStaged =
-      if (lineStateActive(stateInDir))
-        Some(prof("inc:line-stage")(lineStateStage(newDocs,
-          bc => StateLayout.readSlicesPruned(spark, lineage,
-            "line_df_batch", "h", bc.select(col("h"))),
-          stateOutDir, lineMinDf)))
-      else None
-
     // Batch-scale writes ONLY: this dir's slices plus the (small) full
     // label table. The corpus-scale artifacts are never rewritten —
-    // readers compose them along the lineage.
-    val deconNew = prof("inc:prep")(prepBatch(
-      lineStaged.map(_.frame).getOrElse(newDocs),
-      benchmark, minQuality,
-      minContaminatedShingles, classifier, minClassifierScore))
-
-    // Optional exact-recrawl gate (the Bloom route, q91's shape): drop
-    // batch docs whose normalized content ALREADY exists in state
-    // before they pay the shingle/signature/LSH front. History keys
-    // come from the COMPACT hash_batch slices (16 bytes/doc), not from
-    // re-hashing corpus text. Output-preserving under monotonic ingest
-    // ids (batch ids > history ids): an exact dup has identical
-    // shingles, so LSH links it to its history twin, identical quality
-    // score, and the lower-id twin wins the survivor tie-break — the
-    // gate drops exactly the docs survivor selection would drop
-    // (BloomGateCurationSpec pins all three cadences equal).
-    val deconRouted =
-      if (!exactGate) deconNew
-      else {
-        // The batch's hashed frame persists FIRST: the pruned history
-        // read collects the batch's bucket set (materializing this
-        // cache), so deriving keys never re-runs the prep front, and
-        // the history scan touches only the buckets those keys hit
-        // (VERDICT r09 item 1) — previously a full composed-corpus
-        // hash_batch read every week. The Bloom route is unchanged on
-        // top: pruned keys are a SUPERSET of the batch's true matches,
-        // so routing and the exact confirm join stay output-identical
-        // (BloomGateCurationSpec pins the cadence equality).
-        val hashedBatch = deconNew
-          .withColumn("content_hash", TextDedup.contentHash(col("text")))
-          .persist()
-        val histKeys = StateLayout.readSlicesPruned(spark, lineage,
-          "hash_batch", "content_hash", hashedBatch.select(col("content_hash")))
-          .select(col("content_hash")).distinct().persist()
-        val nHist = histKeys.count()
-        val novel = TextDedup.bloomGatedNewByKeys(histKeys, hashedBatch,
-          "content_hash", nHist)
-          .drop("content_hash")
-        CacheLease.releaseAfterAction(novel) { () =>
-          histKeys.unpersist(); hashedBatch.unpersist(); ()
-        }
-      }
-    // Span-df state (auto-detected like the semantic/ANN state): clean
-    // the batch against the composed gram counts — read pruned to the
-    // batch's gram-key buckets — and land its slice.
-    val spanStaged =
-      if (spanStateActive(stateInDir))
-        Some(prof("inc:span-stage")(spanStateStage(deconRouted,
-          bc => StateLayout.readSlicesPruned(spark, lineage,
-            "span_grams_batch", "h", bc.select(col("h"))),
-          stateOutDir, spanK, spanMinDf)))
-      else None
-    prof("inc:decon-write")(
-      StateLayout.writeBucketed(spanStaged.map(_.frame).getOrElse(deconRouted),
-        s"$stateOutDir/decon_batch", "doc_id", buckets = 8))
-    // Token-scale stage intermediates release once the decon write has
-    // materialized the compact output caches (the audit caches stay
-    // for the folded stats action).
-    spanStaged.foreach(_.afterLand()); lineStaged.foreach(_.afterLand())
-    val deconNewS = StateLayout.readSlice(spark, s"$stateOutDir/decon_batch")
+    // readers compose them along the lineage. Line/span df state is
+    // auto-detected like the semantic/ANN state.
+    val front = batchFront(newDocs, benchmark, stateOutDir, lineage,
+      lineStateActive(stateInDir), spanStateActive(stateInDir), exactGate,
+      minQuality, minContaminatedShingles, classifier, minClassifierScore,
+      spanK, spanMinDf, lineMinDf)
+    val deconNewS = front.decon
     // Retrieval-state increments (auto-detected — the state, not a
     // flag, decides, like the semantic cadence): validated FIRST,
     // before the dedup-state writes, so a replayed batch refuses as
@@ -1109,16 +1055,15 @@ object CurationRun {
     // validateDisjoint + recordIds always on: the O(batch)
     // bucket-pruned probe is the reason the family is in the cadence.
     if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$stateInDir/bm25")))
-      prof("inc:retrieval-state") {
-        val rdocs = deconNewS.select(col("doc_id"), col("text"))
-        Bm25State.writeIncrement(rdocs, "doc_id", "text",
-          s"$stateInDir/bm25", s"$stateOutDir/bm25",
-          validateDisjoint = true, recordIds = true)
-        LmState.writeIncrement(rdocs, "text",
-          s"$stateInDir/lm", s"$stateOutDir/lm",
-          validateDisjoint = true, recordIds = true)
-      }
+        java.nio.file.Paths.get(s"$stateInDir/bm25"))) {
+      val rdocs = deconNewS.select(col("doc_id"), col("text"))
+      Bm25State.writeIncrement(rdocs, "doc_id", "text",
+        s"$stateInDir/bm25", s"$stateOutDir/bm25",
+        validateDisjoint = true, recordIds = true)
+      LmState.writeIncrement(rdocs, "text",
+        s"$stateInDir/lm", s"$stateOutDir/lm",
+        validateDisjoint = true, recordIds = true)
+    }
     // Semantic STATE writes (frozen-quantizer cadence, auto-detected —
     // the state, not a flag, decides): batch cells + fit summary +
     // merged labels land regardless of which publish tail runs below.
@@ -1156,47 +1101,34 @@ object CurationRun {
       }.getOrElse(false)
     val batchBaseJoin: Option[() => DataFrame] =
       if (!deltaOk) None
-      else Some(DriverOverlap.launchValue(() => prof("inc:base-rows")(
-        // localCheckpoint, not persist — see deltaPublishTailBody's
-        // scaladoc for the lineage-truncation rationale.
+      else Some(DriverOverlap.launchValue(() =>
+        // localCheckpoint, not persist — see deltaPublishTail's note
+        // on `batchBase` for the lineage-truncation rationale.
         PublishState.baseRows(
           deconNewS.select(col("doc_id"), col("text"), col("quality_score")),
-          cfg).localCheckpoint(true))))
+          cfg).localCheckpoint(true)))
     // Independent state groups OVERLAPPED on driver threads (guide
     // §2.6, r14 — same shape as runInit): the compact hash slice, the
     // semantic-state writes, and the ANN-codes append all hang only
     // off the landed decon slice + prior state, while the main thread
     // runs the near-dup chain. The one cross-branch consumer
     // (sem_clusters -> the publish tail) runs after the join.
-    val clustersS = overlapped(Seq(
-      () => prof("inc:hash-write")(StateLayout.writeBucketed(
+    val clustersS = DriverOverlap.overlapped(Seq(
+      () => StateLayout.writeBucketed(
         deconNewS.select(col("doc_id"),
           TextDedup.contentHash(col("text")).as("content_hash")),
-        s"$stateOutDir/hash_batch", "content_hash")),
+        s"$stateOutDir/hash_batch", "content_hash"),
       () => if (semStateActive)
-        prof("inc:sem-state")(
-          semStateIncrementWrites(spark, stateInDir, stateOutDir, lineage,
-            deconNewS, embeddings.get, semThreshold)),
+        semStateIncrementWrites(spark, stateInDir, stateOutDir, lineage,
+          deconNewS, embeddings.get, semThreshold),
       // ANN-codes append (VERDICT r07 item 3, auto-detected like the
       // semantic state): encode ONLY this batch under the frozen model.
       () => if (embeddings.isDefined && annStateActive(stateInDir))
-        prof("inc:ann-append")(writeAnnIncrement(spark, stateInDir,
-          stateOutDir, embeddedVecs(deconNewS, embeddings.get)))
+        writeAnnIncrement(spark, stateInDir,
+          stateOutDir, embeddedVecs(deconNewS, embeddings.get))
     )) {
-      val idxNew = TextDedup.buildIndex(deconNewS, "doc_id", "text", n = 3, bits = 32)
-      prof("inc:index-write")(
-        StateLayout.writeBucketed(idxNew.df, s"$stateOutDir/index_batch", "doc_id"))
-      val idxNewS = StateLayout.readSlice(spark, s"$stateOutDir/index_batch")
-      val sigNew = TextDedup.minhashSignatures(
-        TextDedup.indexFromFrame(idxNewS, bits = 32), NumHashes)
-      prof("inc:sig-write")(
-        Sinks.overwriteParquet(sigNew, s"$stateOutDir/signatures_batch", numFiles = 2))
-      val sigNewS = spark.read.parquet(s"$stateOutDir/signatures_batch")
-      prof("inc:bands-write")(
-        StateLayout.writeBucketed(TextDedup.bandFrame(sigNewS, NumHashes, Bands),
-          s"$stateOutDir/bands_batch", "band"))
+      val (idxNewS, _) = writeNearDupSlices(deconNewS, stateOutDir, sigFiles = 2)
       val bandsNewS = StateLayout.readSlice(spark, s"$stateOutDir/bands_batch")
-
       // Pruned-state pairs (VERDICT r09 item 1 extended to the dedup
       // front): candidates come from the batch's banding against history
       // band rows read pruned to the batch's band keys; the
@@ -1210,7 +1142,7 @@ object CurationRun {
       // serving probes) and degrades to the same full scan — never more
       // bytes — on big weekly batches.
       val (newPairs, pairsRel) = TextDedup.minhashLshPairsIncrementalPruned(
-        TextDedup.indexFromFrame(idxNewS, bits = 32), bandsNewS,
+        idxNewS, bandsNewS,
         probe => composedBands(spark, lineage, Some(probe)),
         probe => StateLayout.readSlicesPruned(spark, lineage,
           "index_batch", "doc_id", probe),
@@ -1220,74 +1152,40 @@ object CurationRun {
       // operator's scaladoc); after its contraction materializes,
       // nothing re-reads the pairs, so releasing here is both safe and
       // exception-tight.
-      prof("inc:pairs+cc")(try {
+      try {
         val clusters =
           TextDedup.connectedComponentsIncremental(clustersOld, newPairs)
         Sinks.overwriteParquet(clusters, s"$stateOutDir/clusters", numFiles = 1)
         spark.read.parquet(s"$stateOutDir/clusters")
-      } finally pairsRel())
+      } finally pairsRel()
     }
     StateLayout.writeLineage(stateOutDir, lineage :+ stateOutDir)
 
     // Publish tail. DELTA (VERDICT r10 item 1) when the state carries
     // publish artifacts under the SAME config and the membership flags
-    // are incrementally derivable (no embeddings, or the frozen-
-    // quantizer semantic state — the eager per-run semantic stage
-    // re-clusters the composed corpus each week, so its disposition
-    // is not a per-cluster-local recompute). Otherwise the full
+    // are incrementally derivable (`deltaOk` above); otherwise the full
     // re-publish, which (re)builds the publish state for next week.
-    // (`deltaOk` and the batch base rows were computed above, before
-    // the near-dup chain, so the base-row checkpoint overlapped it.)
-    if (deltaOk)
-      prof("inc:delta-tail")(
-        deltaPublishTail(spark, newDocs, deconNewS, batchBaseJoin.get(),
-          clustersS, cfg,
-          stateInDir, stateOutDir, lineage, outDir, semStateActive,
-          spanStaged, lineStaged, carrier))
-    else {
-      val deconAll = deconOld.unionByName(deconNewS)
-      val kept = keepFromClusters(deconAll, clustersS).persist()
-      val (semFinal, semDroppedEager, semRelease) =
-        if (semStateActive) {
-          val (out, rel) = semanticKeepFilter(kept,
-            spark.read.parquet(s"$stateOutDir/sem_clusters"))
-          (out, -1L, rel)
-        } else {
-          val (f, n, r) = semanticStage(kept, embeddings,
-            semClusters, semIters, semThreshold, semMaxCellSize)
-          (f, n, r)
-        }
-      val (landedCurated, landedBins) = landOutputs(semFinal, outDir,
-        fractions, defaultFraction, packBudget, publishSpan, carrier)
-      // (Re)build the publish state from the full frames so the NEXT
-      // increment can delta — the upgrade path for pre-publish-state
-      // lineages and the recovery path after a config change.
-      if (embeddings.isEmpty || semStateActive)
-        writePublishState(spark, deconAll, kept, semFinal,
-          if (semStateActive)
-            Some(spark.read.parquet(s"$stateOutDir/sem_clusters"))
-          else None,
-          cfg, stateOutDir, outDir, v = lineage.size, carrier)
-      PublishState.markComplete(outDir, carrier)
-      // The run's ONE audit action (VERDICT r09 item 3).
-      val c = foldCounts(Seq(
-        "input" -> newDocs, "decon" -> deconAll, "kept" -> kept,
-        "sampled" -> landedCurated, "bins" -> landedBins) ++
-        spanStaged.map(s => "span" -> s.audit) ++
-        lineStaged.map(s => "line" -> s.audit) ++
-        (if (semStateActive) Seq("semfinal" -> semFinal) else Nil))
-      spanStaged.foreach(_.afterAudit()); lineStaged.foreach(_.afterAudit())
-      semRelease(); kept.unpersist()
-      Stats(input = c("input"), gated = -1L, modelGated = -1L,
-        decontaminated = c("decon"),
-        spanCleaned = spanStaged.fold(-1L)(_ => c("span")),
-        kept = c("kept"),
-        semDropped =
-          if (semStateActive) c("kept") - c("semfinal") else semDroppedEager,
-        sampled = c("sampled"), bins = c("bins"),
-        lineCleaned = lineStaged.fold(-1L)(_ => c("line")))
+    batchBaseJoin match {
+      case Some(joinBaseRows) =>
+        // Every job the delta tail schedules carries this tag (UI
+        // debugging; MemPressureStress splits its spill accounting on
+        // it). Tags add to the caller's own, so nothing is clobbered.
+        val sc = spark.sparkContext
+        sc.addJobTag(DeltaPublishJobTag)
+        try deltaPublishTail(spark, newDocs, deconNewS, joinBaseRows(),
+          clustersS, cfg, stateInDir, stateOutDir, lineage, outDir,
+          semStateActive, front, carrier)
+        finally sc.removeJobTag(DeltaPublishJobTag)
+      case None =>
+        fullPublishTail(newDocs, deconOld.unionByName(deconNewS), clustersS,
+          front, semStateActive, embeddings, semClusters, semIters,
+          semThreshold, semMaxCellSize, cfg, stateOutDir, outDir,
+          v = lineage.size, carrier)
     }
   }
+
+  /** The job tag every Spark job of the delta publish tail carries. */
+  val DeltaPublishJobTag = "graft-delta-publish"
 
   /** The incremental semantic-state WRITES, extracted from the publish
     * tail (VERDICT r10 item 1): carry the frozen quantizer forward,
@@ -1332,6 +1230,14 @@ object CurationRun {
       s"$stateOutDir/sem_clusters", numFiles = 1)
   }
 
+  /** Test seam for the crash-atomicity spec (VERDICT r12 item 2):
+    * invoked with a phase label at injection points inside the delta
+    * publish tail; a spec swaps in a thrower to kill the tail between
+    * the carry phase and the manifest write, then pins that readers
+    * refuse the partial publish and a re-run converges bit-equal.
+    * No-op in production. */
+  private[graft] var publishTailProbe: String => Unit = _ => ()
+
   /** DELTA weekly publish (VERDICT r10 item 1; metadata made
     * batch-scale in r12 — VERDICT r11 item 1): re-derive membership
     * flags ONLY where the batch can have moved them, derive the
@@ -1355,54 +1261,12 @@ object CurationRun {
     * rows AND stats). Text is read only for the batch, the changed
     * shards' previous curated files, and (rare) a re-surfacing doc's
     * bucket-pruned decon lookup. */
-  /** Test seam for the crash-atomicity spec (VERDICT r12 item 2):
-    * invoked with a phase label at injection points inside the delta
-    * publish tail; a spec swaps in a thrower to kill the tail between
-    * the carry phase and the manifest write, then pins that readers
-    * refuse the partial publish and a re-run converges bit-equal.
-    * No-op in production. */
-  private[graft] var publishTailProbe: String => Unit = _ => ()
-
   private def deltaPublishTail(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, deconNewS: DataFrame, batchBase: DataFrame,
       clustersS: DataFrame,
       cfg: PublishState.Config, stateInDir: String, stateOutDir: String,
       lineageOld: Seq[String], outDir: String, semStateOn: Boolean,
-      spanStaged: Option[StagedAudit],
-      lineStaged: Option[StagedAudit],
-      carrier: PublishCarrier = PublishCarrier.Posix): Stats = {
-    // Job-group tag: every Spark job this tail schedules is
-    // attributable (UI debugging; MemPressureStress splits its spill
-    // accounting on it). Thread-local on the driver; the CALLER's
-    // group (runIncremental is public API — a host app may have
-    // tagged its own jobs) is saved and restored, not clobbered
-    // (round-12 review finding #3).
-    val sc = spark.sparkContext
-    val prevGroup = sc.getLocalProperty("spark.jobGroup.id")
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobGroup(DeltaPublishJobGroup,
-      "delta weekly publish tail", interruptOnCancel = false)
-    try deltaPublishTailBody(spark, newDocs, deconNewS, batchBase,
-      clustersS, cfg,
-      stateInDir, stateOutDir, lineageOld, outDir, semStateOn,
-      spanStaged, lineStaged, carrier)
-    finally {
-      if (prevGroup == null) sc.clearJobGroup()
-      else sc.setJobGroup(prevGroup, prevDesc, interruptOnCancel = false)
-    }
-  }
-
-  /** The job-group id [[deltaPublishTail]] tags its jobs with. */
-  val DeltaPublishJobGroup = "graft-delta-publish"
-
-  private def deltaPublishTailBody(spark: org.apache.spark.sql.SparkSession,
-      newDocs: DataFrame, deconNewS: DataFrame, batchBase: DataFrame,
-      clustersS: DataFrame,
-      cfg: PublishState.Config, stateInDir: String, stateOutDir: String,
-      lineageOld: Seq[String], outDir: String, semStateOn: Boolean,
-      spanStaged: Option[StagedAudit],
-      lineStaged: Option[StagedAudit],
-      carrier: PublishCarrier): Stats = {
+      front: BatchFront, carrier: PublishCarrier): Stats = {
     import graft.functions.TextFunctions.tokens
     val (_, prevOut) = PublishState.readMeta(stateInDir, carrier)
     // `batchBase` arrives CHECKPOINTED (localCheckpoint, not persist):
@@ -1444,12 +1308,10 @@ object CurationRun {
         .select(col("doc_id"))
     }
     val pruneKeys = seedIds.unionByName(semTouchedDocs).distinct()
-    val prevStanding = prof("  delta:compose-pruned")(
-      PublishState.composeLedgerPruned(spark, lineageOld, pruneKeys)
-        .localCheckpoint(true))
-    val updated = prof("  delta:flags")(
-      deltaLedgerRows(batchBase, prevStanding, clustersS, semLabels)
-        .localCheckpoint(true))
+    val prevStanding = PublishState.composeLedgerPruned(spark, lineageOld,
+      pruneKeys).localCheckpoint(true)
+    val updated = deltaLedgerRows(batchBase, prevStanding, clustersS,
+      semLabels).localCheckpoint(true)
     // Membership EVENTS per shard, from the correction rows against
     // their previous standing values (complete for every updated doc
     // — updated ⊆ the prune superset): the exact changed set, the
@@ -1459,7 +1321,7 @@ object CurationRun {
     val dn = when(col("member") && !coalesce(col("__om"), lit(false)), 1)
       .when(!col("member") && coalesce(col("__om"), lit(false)), -1)
       .otherwise(0)
-    val evAgg = prof("  delta:events")(updated
+    val evAgg = updated
       .join(prevStanding.select(col("doc_id"), col("surv").as("__os"),
           col("semok").as("__ok"), col("member").as("__om"),
           lit(true).as("__old")),
@@ -1484,8 +1346,8 @@ object CurationRun {
         sum(col("dfp")).as("dfp"), sum(col("ddocs")).as("ddocs"),
         sum(col("dkept")).as("dkept"), sum(col("dsem")).as("dsem"),
         sum(col("dent_old")).as("dent_old"))
-      .persist())
-    val evRows = prof("  delta:events-collect")(evAgg.collect())
+      .persist()
+    val evRows = evAgg.collect()
     val changed = evRows.filter(_.getAs[Long]("nev") > 0)
       .map(_.getAs[Long]("shard")).toSeq.sorted
     // Carry = every shard present in the previous publish that the
@@ -1504,7 +1366,7 @@ object CurationRun {
     PublishState.prepareDir(s"$outDir/curated", carrier)
     PublishState.carryShardsExcept(s"$prevOut/curated", s"$outDir/curated",
       changedSet, carrier)
-    if (changed.nonEmpty) prof("  delta:curated") {
+    if (changed.nonEmpty) {
       val batchText = deconNewS.select(col("doc_id"), col("text"))
       val prevFiles =
         PublishState.shardFilesFor(s"$prevOut/curated", changedSet, carrier)
@@ -1571,9 +1433,9 @@ object CurationRun {
     PublishState.carryShardsExcept(s"$prevOut/packed", s"$outDir/packed",
       changedSet, carrier)
     publishTailProbe("after-carry")
-    val newBins = prof("  delta:packed") {
-      val changedCuratedFiles =
-        PublishState.shardFilesFor(s"$outDir/curated", changedSet, carrier)
+    val changedCuratedFiles =
+      PublishState.shardFilesFor(s"$outDir/curated", changedSet, carrier)
+    val newBins =
       if (changedCuratedFiles.nonEmpty) {
         val cur = spark.read.parquet(changedCuratedFiles: _*)
         PublishState.writeSharded(
@@ -1588,7 +1450,6 @@ object CurationRun {
           PublishState.shardFilesFor(s"$outDir/packed", changedSet, carrier)
         if (files.nonEmpty) Some(spark.read.parquet(files: _*)) else None
       } else None
-    }
 
     // Degenerate-corpus guard: a publish with no carried files and no
     // changed rows (zero members anywhere) must still leave readable
@@ -1631,15 +1492,13 @@ object CurationRun {
     // Next week's state: the correction slice, the incrementally
     // merged fingerprints (pinned == full recompute), the composed
     // totals, and the meta pointing at THIS publish.
-    prof("  delta:ledger-write")(
-      PublishState.writeLedgerSlice(updated, stateOutDir, v = lineageOld.size))
+    PublishState.writeLedgerSlice(updated, stateOutDir, v = lineageOld.size)
     // Fingerprint DELTA slice only (VERDICT r12 item 4): the weekly
     // path neither reads nor rewrites the composed table — readers
     // compose the newest full table (init/rebase) with the delta
     // slices, pinned equal to the from-scratch recompute at every
     // version. The evAgg rows already ARE the deltas.
-    prof("  delta:fps-write")(
-      PublishState.writeFingerprintDelta(evAgg, stateOutDir))
+    PublishState.writeFingerprintDelta(evAgg, stateOutDir)
     PublishState.writeMeta(stateOutDir, cfg, outDir, carrier)
     val tPrev = PublishState.readTotals(stateInDir, carrier)
     def dsum(f: String): Long = evRows.map(_.getAs[Long](f)).sum
@@ -1683,11 +1542,7 @@ object CurationRun {
 
     // Audit: the composed totals replace the corpus-frame counts
     // one-for-one; bins from the landed manifest (tiny read).
-    val c = prof("  delta:stats")(foldCounts(Seq(
-      "input" -> newDocs) ++
-      spanStaged.map(s => "span" -> s.audit) ++
-      lineStaged.map(s => "line" -> s.audit)))
-    spanStaged.foreach(_.afterAudit()); lineStaged.foreach(_.afterAudit())
+    val c = foldCounts(Seq("input" -> newDocs) ++ front.audits)
     val bins = spark.read.parquet(s"$outDir/manifest")
       .agg(coalesce(sum(col("n_bins")), lit(0L))).head().getLong(0)
     // batchBase/prevStanding/updated are localCheckpoint blocks, not
@@ -1695,11 +1550,11 @@ object CurationRun {
     evAgg.unpersist()
     Stats(input = c("input"), gated = -1L, modelGated = -1L,
       decontaminated = totals.nDocs,
-      spanCleaned = spanStaged.fold(-1L)(_ => c("span")),
+      spanCleaned = front.span.fold(-1L)(_ => c("span")),
       kept = totals.nKept,
       semDropped = if (semStateOn) totals.nKept - totals.nSemfinal else -1L,
       sampled = totals.nMember, bins = bins,
-      lineCleaned = lineStaged.fold(-1L)(_ => c("line")),
+      lineCleaned = front.line.fold(-1L)(_ => c("line")),
       nShardsChanged = changed.size.toLong,
       nShardsCarried = nCarried.toLong,
       nShardsOverlap = nOverlap)
@@ -1890,11 +1745,11 @@ object CurationRun {
     require(!retrainSemantic || embeddings.isDefined,
       "retrainSemantic needs the embeddings frame to re-derive cells")
     val lineage = StateLayout.readLineage(stateInDir)
-    StateLayout.writeBucketed(readSlices(spark, lineage, "decon_batch"),
+    StateLayout.writeBucketed(StateLayout.readSlices(spark, lineage, "decon_batch"),
       s"$stateOutDir/decon_batch", "doc_id", buckets = 8)
-    StateLayout.writeBucketed(readSlices(spark, lineage, "index_batch"),
+    StateLayout.writeBucketed(StateLayout.readSlices(spark, lineage, "index_batch"),
       s"$stateOutDir/index_batch", "doc_id")
-    Sinks.overwriteParquet(readSlices(spark, lineage, "signatures_batch"),
+    Sinks.overwriteParquet(StateLayout.readSlices(spark, lineage, "signatures_batch"),
       s"$stateOutDir/signatures_batch", numFiles = 4)
     // Banding consolidates as pure IO where slices exist; pre-bands
     // lineage dirs re-derive from their signature slices ONCE here —
@@ -1906,7 +1761,7 @@ object CurationRun {
     // re-derives the bucket count as the corpus grows (B ~ slice
     // bytes / target bucket bytes), keeping per-increment pruned
     // reads batch-proportional between rebases.
-    StateLayout.writeBucketed(readSlices(spark, lineage, "hash_batch"),
+    StateLayout.writeBucketed(StateLayout.readSlices(spark, lineage, "hash_batch"),
       s"$stateOutDir/hash_batch", "content_hash")
     Sinks.overwriteParquet(spark.read.parquet(s"$stateInDir/clusters"),
       s"$stateOutDir/clusters", numFiles = 1)
@@ -1929,13 +1784,13 @@ object CurationRun {
     // the readers sum at use time, in one compact slice.
     if (spanStateActive(stateInDir))
       StateLayout.writeBucketed(
-        readSlices(spark, lineage, "span_grams_batch")
+        StateLayout.readSlices(spark, lineage, "span_grams_batch")
           .groupBy(col("h")).agg(sum(col("n_docs")).as("n_docs")),
         s"$stateOutDir/span_grams_batch", "h")
     // Line-df state consolidates the same way: slice counts add.
     if (lineStateActive(stateInDir))
       StateLayout.writeBucketed(
-        readSlices(spark, lineage, "line_df_batch")
+        StateLayout.readSlices(spark, lineage, "line_df_batch")
           .groupBy(col("h")).agg(sum(col("n_docs")).as("n_docs")),
         s"$stateOutDir/line_df_batch", "h")
     // ANN index state: codes consolidate as pure IO; the frozen model
@@ -1944,7 +1799,7 @@ object CurationRun {
     // unlike the semantic quantizer there is no cross-batch label
     // state to re-derive and no retrain valve needed here).
     if (annStateActive(stateInDir)) {
-      StateLayout.writeBucketed(readSlices(spark, lineage, "ann_codes_batch"),
+      StateLayout.writeBucketed(StateLayout.readSlices(spark, lineage, "ann_codes_batch"),
         s"$stateOutDir/ann_codes_batch", "cell")
       Sinks.overwriteParquet(spark.read.parquet(s"$stateInDir/ann_model"),
         s"$stateOutDir/ann_model", numFiles = 1)
@@ -1953,11 +1808,8 @@ object CurationRun {
         java.nio.file.Paths.get(s"$stateInDir/sem_centroids"))) {
       if (retrainSemantic) {
         val emb = embeddings.get
-        val vecs = spark.read.parquet(s"$stateOutDir/decon_batch")
-          .select(col("doc_id"))
-          .join(emb.select(col("vec_id"), col("embedding")),
-            col("doc_id") === col("vec_id"))
-          .select(col("vec_id"), col("embedding"))
+        val vecs = embeddedVecs(
+          spark.read.parquet(s"$stateOutDir/decon_batch"), emb)
         val cen = VectorSim.kmeansCentroids(vecs, semClusters, semIters)
         writeSemCentroids(spark, stateOutDir, cen)
         java.nio.file.Files.writeString(
@@ -1978,7 +1830,7 @@ object CurationRun {
             cellsS, emb, cellsS.select(col("vec_id")), semThreshold)),
           s"$stateOutDir/sem_clusters", numFiles = 1)
       } else {
-        StateLayout.writeBucketed(readSlices(spark, lineage, "sem_cells_batch"),
+        StateLayout.writeBucketed(StateLayout.readSlices(spark, lineage, "sem_cells_batch"),
           s"$stateOutDir/sem_cells_batch", "cell")
         // Fit summaries consolidate like the df slices: the frozen
         // quantizer is unchanged, and decimal distance sums add
@@ -2187,8 +2039,7 @@ object CurationRun {
       .join(quality.where(col("quality_score") >= minQuality), "doc_id")
 
     // Model-based quality gate (optional, pre-trained weights).
-    val (gated, modelGated) =
-      classifierStage(heurGated, classifier, minClassifierScore)
+    val gated = classifierStage(heurGated, classifier, minClassifierScore)
 
     // Benchmark decontamination (left-anti against the flagged set).
     // The overlap floor matters on corpora with a dense shared
@@ -2202,12 +2053,12 @@ object CurationRun {
     // chain per reference (multi-MB plan strings, measured ~27% of the
     // e2e driver wall in stack samples). Checkpointing pays the
     // chain's optimization once; blocks release via ContextCleaner.
-    val decon = prof("run:decon")(gated.join(
+    val decon = gated.join(
       TextDedup.contaminated(gated, benchmark, "doc_id", "text", n = 3)
         .where(col("n_contaminated_shingles") >= minContaminatedShingles)
         .select(col("doc_id")),
       Seq("doc_id"), "left_anti")
-      .localCheckpoint(true))
+      .localCheckpoint(true)
 
     // Substring-level span removal (q69, Lee et al. 2022) BEFORE
     // near-dup clustering: cross-document repeated spans (boilerplate
@@ -2230,13 +2081,12 @@ object CurationRun {
       .removeRepeatedSpansScoped(decon, "doc_id", "text", k = spanK, minDf = spanMinDf)
     // localCheckpoint (same rationale as `decon`): audit count + suite
     // build + keep join + outputs all hang off this frame.
-    val spanned = prof("run:span")(spanRaw
+    val spanned = spanRaw
       .join(decon.select(col("doc_id"), col("quality_score")), "doc_id")
       .select(col("doc_id"), col("clean_text").as("text"),
         col("quality_score"), col("n_removed"))
-      .localCheckpoint(true))
-    val spanCleaned = prof("run:span-audit")(
-      spanned.where(col("n_removed") > 0).count())
+      .localCheckpoint(true)
+    val spanCleaned = spanned.where(col("n_removed") > 0).count()
     spanRelease()
     val spanDocs = spanned.drop("n_removed")
 
@@ -2245,33 +2095,33 @@ object CurationRun {
     // themselves. MinHash at a low threshold subsumes exact dups
     // (identical signatures collide in every band).
     val suite = DedupSuite(spanDocs, "doc_id", "text", n = 3)
-    val (kept, keptCount) = prof("run:dedup+keep")(
+    val (kept, keptCount) =
       try keepSet(suite, spanDocs, dedupThreshold)
-      finally suite.close())
+      finally suite.close()
 
     // Embedding-space dedup over the near-dup survivors (paraphrase
     // duplicates shingles can't see).
-    val (semFinal, semDropped, semRelease) = prof("run:sem-stage")(
-      semanticStage(kept, embeddings,
-        semClusters, semIters, semThreshold, semMaxCellSize))
+    val (semFinal, semDropped, semRelease) = semanticStage(kept, embeddings,
+      semClusters, semIters, semThreshold, semMaxCellSize)
 
     // Deterministic language-stratified mix + the curated/packed/
     // manifest sinks — the shared output tail of all three cadences.
-    val (landedCurated, landedBins) = prof("run:landOutputs")(
-      landOutputs(semFinal, outDir,
-        fractions, defaultFraction, packBudget, publishSpan, carrier))
+    val (landedCurated, landedBins) = landOutputs(semFinal, outDir,
+      PublishState.Config(fractions, defaultFraction, packBudget, publishSpan),
+      carrier)
     PublishState.markComplete(outDir, carrier)
 
     // One folded audit action (VERDICT r09 item 3) — same discipline
     // as the weekly cadences; the counts that gate stage RELEASES
-    // (spanCleaned, keptCount, the classifier gate) stay eager because
-    // their actions double as cache materializers under scoped leases.
+    // (spanCleaned, keptCount) stay eager because their actions double
+    // as cache materializers under scoped leases.
     val c = foldCounts(Seq(
       "input" -> docs, "gated" -> heurGated, "decon" -> decon,
-      "sampled" -> landedCurated, "bins" -> landedBins))
+      "sampled" -> landedCurated, "bins" -> landedBins) ++
+      classifier.map(_ => "modelGated" -> gated))
     val stats = Stats(
       input = c("input"), gated = c("gated"),
-      modelGated = modelGated,
+      modelGated = c.getOrElse("modelGated", -1L),
       decontaminated = c("decon"), spanCleaned = spanCleaned,
       kept = keptCount, semDropped = semDropped,
       sampled = c("sampled"), bins = c("bins"))

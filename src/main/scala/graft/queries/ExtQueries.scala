@@ -42,20 +42,6 @@ object ExtQueries {
     p.toString
   }
 
-  /** Entry-level twin of CurationRun's opt-in phase profiler
-    * (`SPARK_GRAFT_CADENCE_PROF=1`) for the composed e2e entries'
-    * pre-run stages (classifier train, synthesis warm) and run walls.
-    * Zero cost when unset. */
-  private val entryProfOn = sys.env.get("SPARK_GRAFT_CADENCE_PROF").contains("1")
-  private def eprof[A](label: String)(body: => A): A =
-    if (!entryProfOn) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"  [cadence-prof] $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
-
   def q16TokenCount(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.tokenCounts(Tables.documents(s, dir), "doc_id", "text")
 
@@ -1074,16 +1060,15 @@ object ExtQueries {
     val linedWarm = scala.concurrent.Future(
       lined.queryExecution.toRdd.count())(
       scala.concurrent.ExecutionContext.global)
-    val weights = eprof("entry:train")(QualityClassifier.train(
+    val weights = QualityClassifier.train(
       normAll.withColumn("y", when(col("lang") === "en", 1).otherwise(0)),
-      "doc_id", "text", "y", buckets = 256, iters = 3, lr = 0.5))
-    eprof("entry:warm-wait")(scala.concurrent.Await.result(linedWarm,
-      scala.concurrent.duration.Duration.Inf))
+      "doc_id", "text", "y", buckets = 256, iters = 3, lr = 0.5)
+    scala.concurrent.Await.result(linedWarm,
+      scala.concurrent.duration.Duration.Inf)
     val base = scratchDir("q146_cadence")
     def b(i: Int) = lined.where(pmod(col("doc_id"), lit(3)) === i)
     val emb = Tables.embeddings(s, dir)
     val st = try {
-    eprof("entry:run0")(
     CurationRun.runInit(b(0), benchmark, s"$base/out0", s"$base/state0",
       minQuality = 0.75, dedupThreshold = 0.25, minContaminatedShingles = 1,
       fractions = Map("en" -> 0.5), defaultFraction = 0.9,
@@ -1095,8 +1080,7 @@ object ExtQueries {
       annState = true, annSubspaces = 4, annCodewords = 8,
       annClusters = 4, annIters = 2,
       spanState = true, spanK = 8, spanMinDf = 2,
-      lineState = true, lineMinDf = 2))
-    eprof("entry:run1")(
+      lineState = true, lineMinDf = 2)
     CurationRun.runIncremental(b(1), benchmark, s"$base/out1",
       s"$base/state0", s"$base/state1",
       minQuality = 0.75, dedupThreshold = 0.25, minContaminatedShingles = 1,
@@ -1105,8 +1089,7 @@ object ExtQueries {
       embeddings = Some(emb), semClusters = 8, semIters = 2,
       semThreshold = 0.35,
       classifier = Some((weights, 256)), minClassifierScore = 0.0001,
-      spanK = 8, spanMinDf = 2, lineMinDf = 2))
-    eprof("entry:run2")(
+      spanK = 8, spanMinDf = 2, lineMinDf = 2)
     CurationRun.runIncremental(b(2), benchmark, s"$base/out2",
       s"$base/state1", s"$base/state2",
       minQuality = 0.75, dedupThreshold = 0.25, minContaminatedShingles = 1,
@@ -1115,7 +1098,7 @@ object ExtQueries {
       embeddings = Some(emb), semClusters = 8, semIters = 2,
       semThreshold = 0.35,
       classifier = Some((weights, 256)), minClassifierScore = 0.0001,
-      spanK = 8, spanMinDf = 2, lineMinDf = 2))
+      spanK = 8, spanMinDf = 2, lineMinDf = 2)
     // The finally covers ALL THREE eager runs: a failure in runInit
     // must not leak the persisted corpus for the session's lifetime.
     } finally lined.unpersist()
@@ -1915,9 +1898,9 @@ object ExtQueries {
       .normalize(docs, "doc_id", "text")
       .select(col("doc_id"), col("norm_text").as("text"))
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-    val weights = eprof("entry:train")(QualityClassifier.train(
+    val weights = QualityClassifier.train(
       normAll.withColumn("y", when(col("lang") === "en", 1).otherwise(0)),
-      "doc_id", "text", "y", buckets = 256, iters = 3, lr = 0.5))
+      "doc_id", "text", "y", buckets = 256, iters = 3, lr = 0.5)
     val out = scratchDir("q137_out")
     val st = CurationRun.run(corpus, benchmark, out,
       minQuality = 0.75, dedupThreshold = 0.25, minContaminatedShingles = 1,

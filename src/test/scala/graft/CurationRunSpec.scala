@@ -180,6 +180,61 @@ class CurationRunSpec extends AnyFunSuite {
       "both alien docs fall at the model gate in both cadences")
   }
 
+  test("a keep-everything classifier adds only its weights collect to runInit's jobs") {
+    // The classifier is a filter fused into the prep front; its one
+    // job of its own is QualityClassifier.weightsModel's collect. Jobs
+    // are counted under a job tag this thread adds — driver-thread
+    // branches inherit it — so only runInit's own jobs count.
+    // Embeddings without semantic state keep the publish-state branch
+    // off: with it on, that branch and the output sinks race to
+    // first-materialize the kept cache, and the job count varies by 2.
+    import graft.operators.QualityClassifier
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val alien = "qq ww ee rr tt yy uu ii oo pp aa ss dd ff gg hh jj kk ll zz"
+    val w = QualityClassifier.train(
+      Seq((10L, goodEn, 1), (11L, goodEs, 1), (12L, alien, 0))
+        .toDF("doc_id", "text", "y"),
+      "doc_id", "text", "y", buckets = 128, iters = 3, lr = 0.5)
+    val docs = Seq((1L, goodEn), (3L, alien), (11L, goodEs))
+      .toDF("doc_id", "text")
+    val benchmark = Seq((100L, benchText)).toDF("doc_id", "text")
+    val emb = Seq((1L, Seq(1f, 0f, 0f, 0f)), (3L, Seq(0f, 1f, 0f, 0f)),
+      (11L, Seq(0f, 0f, 1f, 0f))).toDF("vec_id", "embedding")
+    val base = TestSpark.tmpDir("init_cls_jobs")
+    val sc = spark.sparkContext
+    val tag = "curation-run-spec-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag)))
+          jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      jobs.set(0)
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+      org.apache.spark.graft.SparkShims.waitUntilListenerBusEmpty(spark, 30000L)
+      jobs.get()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val plain = jobsOf(CurationRun.runInit(docs, benchmark,
+        s"$base/out_plain", s"$base/state_plain",
+        embeddings = Some(emb), semClusters = 2))
+      val withCls = jobsOf(CurationRun.runInit(docs, benchmark,
+        s"$base/out_cls", s"$base/state_cls",
+        embeddings = Some(emb), semClusters = 2,
+        classifier = Some((w, 128)), minClassifierScore = 0.0))
+      info(s"runInit jobs: $plain without a classifier, $withCls with one")
+      assert(plain > 0)
+      assert(withCls <= plain + 1,
+        s"classifier run took $withCls jobs vs $plain without: only the " +
+          "weights collect may be added")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("keepSet returns a frame already materialized in the cache (no post-close recompute)") {
     // VERDICT r04 item 2: the survivors join reads the suite's quality
     // frame; a frame persisted lazily and first materialized AFTER
