@@ -35,8 +35,13 @@ object DriverOverlap {
       new java.util.concurrent.Callable[A] { def call(): A = branch() })
     val th = new Thread(t, "graft-state-branch")
     th.setDaemon(true); th.start()
-    () => try t.get() catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
+    // Join the THREAD, not only the task: a caller's failure path that
+    // returns from the hook has no branch thread left running.
+    () => {
+      th.join()
+      try t.get() catch {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      }
     }
   }
 

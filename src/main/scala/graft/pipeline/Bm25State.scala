@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.tokens
 import graft.operators.TextSearch
-import graft.sources.Sinks
 
 /** Weekly-cadence lexical retrieval index (the BM25 twin of the
   * curation state families, q149): per-batch postings state +
@@ -78,7 +77,7 @@ object Bm25State {
           s"$stateOutDir/doc_ids_batch", "doc_id")
     )) {
       StateLayout.writeBucketed(postings, s"$stateOutDir/postings_batch", "tok")
-      Sinks.overwriteParquet(
+      StateLayout.writeState(
         dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")),
         s"$stateOutDir/stats_batch", numFiles = 1)
     }
@@ -325,7 +324,7 @@ object Bm25State {
       StateLayout.writeBucketed(
         StateLayout.readSlices(spark, lineage, "doc_ids_batch"),
         s"$stateOutDir/doc_ids_batch", "doc_id")
-    Sinks.overwriteParquet(
+    StateLayout.writeState(
       StateLayout.readSlices(spark, lineage, "stats_batch")
         .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
           coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl")),

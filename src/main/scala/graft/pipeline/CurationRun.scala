@@ -216,7 +216,7 @@ object CurationRun {
     val dim = vecs.select(size(col("embedding")).as("d")).head().getInt(0)
     val m = VectorSim.pqTrain(vecs, dim, subspaces, codewords, iters)
     val cen = VectorSim.kmeansCentroids(vecs, clusters, iters)
-    Sinks.overwriteParquet(VectorSim.annModelFrame(spark, m, cen),
+    StateLayout.writeState(VectorSim.annModelFrame(spark, m, cen),
       s"$stateOutDir/ann_model", numFiles = 1)
     StateLayout.writeBucketed(VectorSim.annCodesFrame(vecs, m, cen),
       s"$stateOutDir/ann_codes_batch", "cell")
@@ -226,9 +226,9 @@ object CurationRun {
     * batch's vectors, land the batch slice, carry the model forward. */
   private def writeAnnIncrement(spark: org.apache.spark.sql.SparkSession,
       stateInDir: String, stateOutDir: String, vecsNew: DataFrame): Unit = {
-    val modelF = spark.read.parquet(s"$stateInDir/ann_model")
+    val modelF = StateLayout.readState(spark, s"$stateInDir/ann_model")
     val (m, cen) = VectorSim.annModelFromFrame(modelF)
-    Sinks.overwriteParquet(modelF, s"$stateOutDir/ann_model", numFiles = 1)
+    StateLayout.writeState(modelF, s"$stateOutDir/ann_model", numFiles = 1)
     StateLayout.writeBucketed(VectorSim.annCodesFrame(vecsNew, m, cen),
       s"$stateOutDir/ann_codes_batch", "cell")
   }
@@ -251,7 +251,7 @@ object CurationRun {
   def annServe(spark: org.apache.spark.sql.SparkSession, stateDir: String,
       queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
     val (m, cen) = VectorSim.annModelFromFrame(
-      spark.read.parquet(s"$stateDir/ann_model"))
+      StateLayout.readState(spark, s"$stateDir/ann_model"))
     val probes = VectorSim.probeFrame(queries, cen, nprobe).persist()
     val codes = StateLayout.readSlicesPruned(spark, StateLayout.readLineage(stateDir),
       "ann_codes_batch", "cell", probes.select(col("cell")))
@@ -270,7 +270,7 @@ object CurationRun {
   private def loadAnnVersion(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): (VectorSim.PqModel, Seq[Array[Double]], DataFrame) = {
     val (m, cen) = VectorSim.annModelFromFrame(
-      spark.read.parquet(s"$stateDir/ann_model"))
+      StateLayout.readState(spark, s"$stateDir/ann_model"))
     val codes = StateLayout.readSlices(spark, StateLayout.readLineage(stateDir), "ann_codes_batch")
       .withColumn("state_version", lit(stateDir))
       .persist()
@@ -465,14 +465,14 @@ object CurationRun {
 
   private def writeSemCentroids(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, cen: Seq[Array[Double]]): Unit =
-    Sinks.overwriteParquet(
+    StateLayout.writeState(
       spark.createDataFrame(cen.zipWithIndex.map { case (w, i) =>
         (i, w.toSeq) }).toDF("cell", "vec"),
       s"$stateDir/sem_centroids", numFiles = 1)
 
   private[graft] def readSemCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Array[Double]] =
-    spark.read.parquet(path).orderBy(col("cell"))
+    StateLayout.readState(spark, path).orderBy(col("cell"))
       .collect().map(_.getSeq[Double](1).toArray).toSeq
 
   /** Disposition of the CURRENT kept frame under the composed semantic
@@ -721,10 +721,10 @@ object CurationRun {
         // Ingest-time fit summary (VERDICT r08 item 3): the batch's
         // embeddings are in hand NOW — one extra tiny aggregate here
         // makes every later drift decision O(#slices), not O(corpus).
-        Sinks.overwriteParquet(VectorSim.quantizerFitSlice(vecs, cen),
+        StateLayout.writeState(VectorSim.quantizerFitSlice(vecs, cen),
           s"$stateOutDir/sem_fit_batch", numFiles = 1)
         val cellsS = StateLayout.readSlice(spark, s"$stateOutDir/sem_cells_batch")
-        Sinks.overwriteParquet(
+        StateLayout.writeState(
           TextDedup.connectedComponents(VectorSim.semanticPairsIncremental(
             cellsS, emb, cellsS.select(col("vec_id")), semThreshold)),
           s"$stateOutDir/sem_clusters", numFiles = 1)
@@ -859,9 +859,9 @@ object CurationRun {
     StateLayout.writeBucketed(idx.df, s"$stateOutDir/index_batch", "doc_id")
     val idxS = TextDedup.indexFromFrame(
       StateLayout.readSlice(spark, s"$stateOutDir/index_batch"), bits = 32)
-    Sinks.overwriteParquet(TextDedup.minhashSignatures(idxS, NumHashes),
+    StateLayout.writeState(TextDedup.minhashSignatures(idxS, NumHashes),
       s"$stateOutDir/signatures_batch", numFiles = sigFiles)
-    val sigS = spark.read.parquet(s"$stateOutDir/signatures_batch")
+    val sigS = StateLayout.readState(spark, s"$stateOutDir/signatures_batch")
     StateLayout.writeBucketed(TextDedup.bandFrame(sigS, NumHashes, Bands),
       s"$stateOutDir/bands_batch", "band")
     (idxS, sigS)
@@ -888,7 +888,7 @@ object CurationRun {
       stateOutDir: String, outDir: String, v: Long,
       carrier: PublishCarrier): Stats = {
     val spark = decon.sparkSession
-    def semLabels = spark.read.parquet(s"$stateOutDir/sem_clusters")
+    def semLabels = StateLayout.readState(spark, s"$stateOutDir/sem_clusters")
     val kept = keepFromClusters(decon, clustersS).persist()
     val (semFinal, semDroppedEager, semRelease) =
       if (semStateOn) {
@@ -896,8 +896,15 @@ object CurationRun {
         (out, -1L, rel)
       } else semanticStage(kept, embeddings,
         semClusters, semIters, semThreshold, semMaxCellSize)
+    val publishStateOn = embeddings.isEmpty || semStateOn
+    // The publish-state branch and the output sinks both read the
+    // persisted kept/semFinal caches: materialize them FIRST (the
+    // DriverOverlap caller rule), or the two race to first-materialize
+    // them and the run's job count varies. The count is the audit's
+    // semFinal count (semFinal IS kept without embeddings).
+    val nSemFinal = if (publishStateOn) semFinal.count() else -1L
     val (landedCurated, landedBins) = DriverOverlap.overlapped(Seq(
-      () => if (embeddings.isEmpty || semStateOn)
+      () => if (publishStateOn)
         writePublishState(spark, decon, kept, semFinal,
           if (semStateOn) Some(semLabels) else None,
           cfg, stateOutDir, outDir, v, carrier)
@@ -909,15 +916,14 @@ object CurationRun {
     val c = foldCounts(Seq(
       "input" -> input, "decon" -> decon, "kept" -> kept,
       "sampled" -> landedCurated, "bins" -> landedBins) ++
-      front.audits ++
-      (if (semStateOn) Seq("semfinal" -> semFinal) else Nil))
+      front.audits)
     semRelease(); kept.unpersist()
     Stats(input = c("input"), gated = -1L, modelGated = -1L,
       decontaminated = c("decon"),
       spanCleaned = front.span.fold(-1L)(_ => c("span")),
       kept = c("kept"),
       semDropped =
-        if (semStateOn) c("kept") - c("semfinal") else semDroppedEager,
+        if (semStateOn) c("kept") - nSemFinal else semDroppedEager,
       sampled = c("sampled"), bins = c("bins"),
       lineCleaned = front.line.fold(-1L)(_ => c("line")))
   }
@@ -995,8 +1001,8 @@ object CurationRun {
       val (idxS, sigS) = writeNearDupSlices(deconS, stateOutDir, sigFiles = 4)
       val clusters = TextDedup.connectedComponents(
         TextDedup.minhashLshPairs(idxS, sigS, dedupThreshold, NumHashes, Bands))
-      Sinks.overwriteParquet(clusters, s"$stateOutDir/clusters", numFiles = 1)
-      spark.read.parquet(s"$stateOutDir/clusters")
+      StateLayout.writeState(clusters, s"$stateOutDir/clusters", numFiles = 1)
+      StateLayout.readState(spark, s"$stateOutDir/clusters")
     }
     StateLayout.writeLineage(stateOutDir, Seq(stateOutDir))
     fullPublishTail(docs, deconS, clustersS, front, doSemState, embeddings,
@@ -1037,7 +1043,7 @@ object CurationRun {
     // below (bands_batch + the doc-keyed index prune) instead of
     // unconditional full scans.
     val deconOld = StateLayout.readSlices(spark, lineage, "decon_batch")
-    val clustersOld = spark.read.parquet(s"$stateInDir/clusters")
+    val clustersOld = StateLayout.readState(spark, s"$stateInDir/clusters")
     // Batch-scale writes ONLY: this dir's slices plus the (small) full
     // label table. The corpus-scale artifacts are never rewritten —
     // readers compose them along the lineage. Line/span df state is
@@ -1048,22 +1054,16 @@ object CurationRun {
       spanK, spanMinDf, lineMinDf)
     val deconNewS = front.decon
     // Retrieval-state increments (auto-detected — the state, not a
-    // flag, decides, like the semantic cadence): validated FIRST,
-    // before the dedup-state writes, so a replayed batch refuses as
-    // early as the landed decon allows and leaves stateOutDir without
-    // its lineage manifest (not a readable state version).
+    // flag, decides, like the semantic cadence) run as two branches of
+    // the overlapped state block below, off the landed decon slice.
     // validateDisjoint + recordIds always on: the O(batch)
     // bucket-pruned probe is the reason the family is in the cadence.
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$stateInDir/bm25"))) {
-      val rdocs = deconNewS.select(col("doc_id"), col("text"))
-      Bm25State.writeIncrement(rdocs, "doc_id", "text",
-        s"$stateInDir/bm25", s"$stateOutDir/bm25",
-        validateDisjoint = true, recordIds = true)
-      LmState.writeIncrement(rdocs, "text",
-        s"$stateInDir/lm", s"$stateOutDir/lm",
-        validateDisjoint = true, recordIds = true)
-    }
+    // A replayed batch refuses when the block joins — after the
+    // near-dup chain, still BEFORE writeLineage — so stateOutDir is
+    // left without its lineage manifest (not a readable state version).
+    val retrievalOn = java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$stateInDir/bm25"))
+    def rdocs = deconNewS.select(col("doc_id"), col("text"))
     // Semantic STATE writes (frozen-quantizer cadence, auto-detected —
     // the state, not a flag, decides): batch cells + fit summary +
     // merged labels land regardless of which publish tail runs below.
@@ -1108,12 +1108,21 @@ object CurationRun {
           deconNewS.select(col("doc_id"), col("text"), col("quality_score")),
           cfg).localCheckpoint(true)))
     // Independent state groups OVERLAPPED on driver threads (guide
-    // §2.6, r14 — same shape as runInit): the compact hash slice, the
-    // semantic-state writes, and the ANN-codes append all hang only
-    // off the landed decon slice + prior state, while the main thread
-    // runs the near-dup chain. The one cross-branch consumer
-    // (sem_clusters -> the publish tail) runs after the join.
+    // §2.6, r14 — same shape as runInit): the retrieval states, the
+    // compact hash slice, the semantic-state writes, and the
+    // ANN-codes append all hang only off the landed decon slice +
+    // prior state, while the main thread runs the near-dup chain. The
+    // one cross-branch consumer (sem_clusters -> the publish tail)
+    // runs after the join.
     val clustersS = DriverOverlap.overlapped(Seq(
+      () => if (retrievalOn)
+        Bm25State.writeIncrement(rdocs, "doc_id", "text",
+          s"$stateInDir/bm25", s"$stateOutDir/bm25",
+          validateDisjoint = true, recordIds = true),
+      () => if (retrievalOn)
+        LmState.writeIncrement(rdocs, "text",
+          s"$stateInDir/lm", s"$stateOutDir/lm",
+          validateDisjoint = true, recordIds = true),
       () => StateLayout.writeBucketed(
         deconNewS.select(col("doc_id"),
           TextDedup.contentHash(col("text")).as("content_hash")),
@@ -1155,8 +1164,8 @@ object CurationRun {
       try {
         val clusters =
           TextDedup.connectedComponentsIncremental(clustersOld, newPairs)
-        Sinks.overwriteParquet(clusters, s"$stateOutDir/clusters", numFiles = 1)
-        spark.read.parquet(s"$stateOutDir/clusters")
+        StateLayout.writeState(clusters, s"$stateOutDir/clusters", numFiles = 1)
+        StateLayout.readState(spark, s"$stateOutDir/clusters")
       } finally pairsRel()
     }
     StateLayout.writeLineage(stateOutDir, lineage :+ stateOutDir)
@@ -1211,7 +1220,7 @@ object CurationRun {
     // Batch fit under the FROZEN quantizer, landed beside the
     // slice: the weekly drift decision reads these one-row
     // summaries instead of re-scanning state embeddings.
-    Sinks.overwriteParquet(VectorSim.quantizerFitSlice(vecsNew, cen),
+    StateLayout.writeState(VectorSim.quantizerFitSlice(vecsNew, cen),
       s"$stateOutDir/sem_fit_batch", numFiles = 1)
     // Old cell slices matter only where they share a cell with the
     // batch (semanticPairsIncremental's candidate join) — prune the
@@ -1224,9 +1233,9 @@ object CurationRun {
     // Batch-scale pair work: only the new docs' cells join.
     val semPairsNew = VectorSim.semanticPairsIncremental(cellsAll, emb,
       deconNewS.select(col("doc_id").as("vec_id")), semThreshold)
-    Sinks.overwriteParquet(
+    StateLayout.writeState(
       TextDedup.connectedComponentsIncremental(
-        spark.read.parquet(s"$stateInDir/sem_clusters"), semPairsNew),
+        StateLayout.readState(spark, s"$stateInDir/sem_clusters"), semPairsNew),
       s"$stateOutDir/sem_clusters", numFiles = 1)
   }
 
@@ -1270,62 +1279,35 @@ object CurationRun {
     import graft.functions.TextFunctions.tokens
     val (_, prevOut) = PublishState.readMeta(stateInDir, carrier)
     // `batchBase` arrives CHECKPOINTED (localCheckpoint, not persist):
-    // the flag recompute references the batch's base rows from several
-    // DAG branches (quality lookup, batch flags, the sem surv union) —
-    // unpersisted, the language-id + token pass over the batch text
-    // re-executes per branch. On top of the reuse, checkpointing
-    // TRUNCATES LINEAGE: deltaLedgerRows references this frame ~5x and
-    // prevStanding ~6x, so under plain persist every downstream action
-    // re-analyzes (and the SQL-event path re-renders) the full composed
-    // subtree per reference — measured as multi-MB plan strings built
-    // hundreds of times per cadence run, with the driver busy while
-    // executors idle. The frames are narrow and batch-scale, so block
-    // storage is cheap; blocks release via ContextCleaner once the RDD
-    // is collected. The caller materializes it on a driver thread
-    // overlapping the near-dup chain (r14).
+    // the touched-doc frame and the flag recompute both read it, and
+    // the checkpoint truncates its lineage, so neither re-runs nor
+    // re-plans the language-id + token pass over the batch text.
+    // Blocks release via ContextCleaner once the RDD is collected. The
+    // caller materializes it on a driver thread overlapping the
+    // near-dup chain (r14).
     val semLabels =
-      if (semStateOn) Some(spark.read.parquet(s"$stateOutDir/sem_clusters"))
+      if (semStateOn) Some(StateLayout.readState(spark, s"$stateOutDir/sem_clusters"))
       else None
-    // Standing-row prune superset: the flag recompute touches exactly
-    // (1) the batch, (2) members of dedup clusters holding a batch
-    // doc, (3) members of semantic clusters holding a batch doc or a
-    // doc from (2) (surv flips seed sem re-picks, and every
-    // surv-changeable doc is in (2)). All three are batch-scale under
-    // bounded cluster sizes; the ledger read prunes to their buckets.
-    val batchIds = batchBase.select(col("doc_id"))
-    val dedupTouchedDocs = clustersS.join(
-        clustersS.join(batchIds, Seq("doc_id"))
-          .select(col("canonical_id")).distinct(),
-        Seq("canonical_id"))
-      .select(col("doc_id"))
-    val seedIds = batchIds.unionByName(dedupTouchedDocs).distinct()
-    val semTouchedDocs = semLabels match {
-      case None => batchIds.where(lit(false))
-      case Some(l) => l.join(
-          l.join(seedIds, Seq("doc_id"))
-            .select(col("canonical_id")).distinct(),
-          Seq("canonical_id"))
-        .select(col("doc_id"))
-    }
-    val pruneKeys = seedIds.unionByName(semTouchedDocs).distinct()
+    // The flag recompute runs over ONE materialized touched-doc frame
+    // (doc_id, dedup canonical_id, semantic canonical_id): the prune
+    // key of the standing-ledger read and the driving side of the
+    // recompute's single join with the standing and batch rows.
+    val touched = touchedDocs(batchBase, clustersS, semLabels)
+      .localCheckpoint(true)
     val prevStanding = PublishState.composeLedgerPruned(spark, lineageOld,
-      pruneKeys).localCheckpoint(true)
-    val updated = deltaLedgerRows(batchBase, prevStanding, clustersS,
-      semLabels).localCheckpoint(true)
+      touched.select(col("doc_id")))
+    val updated = deltaLedgerRows(touched, batchBase, prevStanding,
+      semLabels.isDefined).localCheckpoint(true)
     // Membership EVENTS per shard, from the correction rows against
-    // their previous standing values (complete for every updated doc
-    // — updated ⊆ the prune superset): the exact changed set, the
-    // fingerprint deltas, and the audit-total deltas, one batch-scale
-    // aggregate, one bounded collect (≤ touched shards).
+    // their previous standing values (carried on every updated row):
+    // the exact changed set, the fingerprint deltas, and the
+    // audit-total deltas, one batch-scale aggregate, one bounded
+    // collect (≤ touched shards).
     val h = xxhash64(col("doc_id"), col("n_tokens")).cast("decimal(38,0)")
     val dn = when(col("member") && !coalesce(col("__om"), lit(false)), 1)
       .when(!col("member") && coalesce(col("__om"), lit(false)), -1)
       .otherwise(0)
     val evAgg = updated
-      .join(prevStanding.select(col("doc_id"), col("surv").as("__os"),
-          col("semok").as("__ok"), col("member").as("__om"),
-          lit(true).as("__old")),
-        Seq("doc_id"), "left")
       .select(col("shard"), dn.cast("long").as("dn"),
         when(dn === 1, h).when(dn === -1, -h)
           .otherwise(lit(0).cast("decimal(38,0)")).as("dfp"),
@@ -1356,149 +1338,163 @@ object CurationRun {
     // 0-until-N range).
     val changedSet = changed.toSet
 
-    // Retract any STALE completion marker before the first mutation
-    // of outDir (a crash-replay re-publishes into the same versioned
-    // dir): from here until markComplete below, readers must refuse
-    // this dir (round-13 review finding #1).
-    PublishState.clearComplete(outDir, carrier)
-    // CURATED: carried shard files + a partial sharded write of the
-    // changed (carry = hard link or FS copy, per the carrier).
-    PublishState.prepareDir(s"$outDir/curated", carrier)
-    PublishState.carryShardsExcept(s"$prevOut/curated", s"$outDir/curated",
-      changedSet, carrier)
-    if (changed.nonEmpty) {
-      val batchText = deconNewS.select(col("doc_id"), col("text"))
-      val prevFiles =
-        PublishState.shardFilesFor(s"$prevOut/curated", changedSet, carrier)
-      // Full-schema read: the previous curated rows of the changed
-      // shards ARE the standing member set (plus each doc's frozen
-      // lang/quality), so no corpus-ledger lookup is needed for the
-      // unchanged neighbors a changed shard carries.
-      val prevCur =
-        if (prevFiles.nonEmpty) spark.read.parquet(prevFiles: _*)
-        else spark.range(0)
-          .select(col("id").as("doc_id"), lit("").as("text"),
-            lit("").as("detected_lang"), lit(0.0).as("quality_score"))
-      // Member rows of the changed shards: corrected docs take their
-      // recomputed flag (member rows kept, leavers dropped), the
-      // shard's untouched previous members carry from prevCur.
-      val members = updated
-        .where(col("member") && col("shard").isin(changed: _*))
-        .select(col("doc_id"), col("detected_lang"), col("quality_score"),
-          col("shard"))
-        .unionByName(prevCur
-          .join(updated.select(col("doc_id")), Seq("doc_id"), "left_anti")
+    // Next week's state rows and this run's audit fold read only
+    // materialized frames (`updated`, `evAgg`, the front's audit
+    // frames), never outDir: they run as branches of the curated ->
+    // packed -> manifest chain below (guide §2.6) and join before the
+    // meta and the completion marker — also when the chain fails, so
+    // no writer outlives this call. The correction slice lands at this
+    // lineage position; the fingerprint DELTA slice only (VERDICT r12
+    // item 4): the weekly path neither reads nor rewrites the composed
+    // table — readers compose the newest full table (init/rebase) with
+    // the delta slices, pinned equal to the from-scratch recompute at
+    // every version. The evAgg rows already ARE the deltas. `c` is
+    // set on its branch thread and read only after the join.
+    var c = Map.empty[String, Long]
+    val bins = DriverOverlap.overlapped(Seq(
+      () => PublishState.writeLedgerSlice(updated, stateOutDir,
+        v = lineageOld.size),
+      () => PublishState.writeFingerprintDelta(evAgg, stateOutDir),
+      () => c = foldCounts(Seq("input" -> newDocs) ++ front.audits)
+    )) {
+      // Retract any STALE completion marker before the first mutation
+      // of outDir (a crash-replay re-publishes into the same versioned
+      // dir): from here until markComplete below, readers must refuse
+      // this dir (round-13 review finding #1).
+      PublishState.clearComplete(outDir, carrier)
+      // CURATED: carried shard files + a partial sharded write of the
+      // changed (carry = hard link or FS copy, per the carrier).
+      PublishState.prepareDir(s"$outDir/curated", carrier)
+      PublishState.carryShardsExcept(s"$prevOut/curated", s"$outDir/curated",
+        changedSet, carrier)
+      if (changed.nonEmpty) {
+        val batchText = deconNewS.select(col("doc_id"), col("text"))
+        val prevFiles =
+          PublishState.shardFilesFor(s"$prevOut/curated", changedSet, carrier)
+        // Full-schema read: the previous curated rows of the changed
+        // shards ARE the standing member set (plus each doc's frozen
+        // lang/quality), so no corpus-ledger lookup is needed for the
+        // unchanged neighbors a changed shard carries.
+        val prevCur =
+          if (prevFiles.nonEmpty) spark.read.parquet(prevFiles: _*)
+          else spark.range(0)
+            .select(col("id").as("doc_id"), lit("").as("text"),
+              lit("").as("detected_lang"), lit(0.0).as("quality_score"))
+        // Member rows of the changed shards: corrected docs take their
+        // recomputed flag (member rows kept, leavers dropped), the
+        // shard's untouched previous members carry from prevCur.
+        val members = updated
+          .where(col("member") && col("shard").isin(changed: _*))
           .select(col("doc_id"), col("detected_lang"), col("quality_score"),
-            cfg.shardOf(col("doc_id")).as("shard")))
-        .persist()
-      // Re-surfacing docs (old, member again, absent from the previous
-      // curated — a batch doc displaced their sem-cluster peer): text
-      // via the doc-bucket-pruned decon read, never a corpus scan.
-      // The collected events already say whether ANY old doc entered
-      // this week (`dent_old`) — the common zero-re-surface week skips
-      // the lookup and its bucket-probe job entirely. Persisted when
-      // taken: the enter set feeds the prune probe's bucket collect
-      // AND the text join — unpersisted, its anti-join DAG executes
-      // twice.
-      val nEnterOld = evRows.map(_.getAs[Long]("dent_old")).sum
-      val enterIds =
-        if (nEnterOld == 0L) None
-        else Some(members.select(col("doc_id"))
-          .join(batchText.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .join(prevCur.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .persist())
-      val enterText = enterIds match {
-        case None => batchText.where(lit(false))
-        case Some(ids) => StateLayout.readSlicesPruned(spark, lineageOld,
-            "decon_batch", "doc_id", ids)
-          .join(ids, Seq("doc_id"))
-          .select(col("doc_id"), col("text"))
+            col("shard"))
+          .unionByName(prevCur
+            .join(updated.select(col("doc_id")), Seq("doc_id"), "left_anti")
+            .select(col("doc_id"), col("detected_lang"), col("quality_score"),
+              cfg.shardOf(col("doc_id")).as("shard")))
+          .persist()
+        // Re-surfacing docs (old, member again, absent from the previous
+        // curated — a batch doc displaced their sem-cluster peer): text
+        // via the doc-bucket-pruned decon read, never a corpus scan.
+        // The collected events already say whether ANY old doc entered
+        // this week (`dent_old`) — the common zero-re-surface week skips
+        // the lookup and its bucket-probe job entirely. Persisted when
+        // taken: the enter set feeds the prune probe's bucket collect
+        // AND the text join — unpersisted, its anti-join DAG executes
+        // twice.
+        val nEnterOld = evRows.map(_.getAs[Long]("dent_old")).sum
+        val enterIds =
+          if (nEnterOld == 0L) None
+          else Some(members.select(col("doc_id"))
+            .join(batchText.select(col("doc_id")), Seq("doc_id"), "left_anti")
+            .join(prevCur.select(col("doc_id")), Seq("doc_id"), "left_anti")
+            .persist())
+        val enterText = enterIds match {
+          case None => batchText.where(lit(false))
+          case Some(ids) => StateLayout.readSlicesPruned(spark, lineageOld,
+              "decon_batch", "doc_id", ids)
+            .join(ids, Seq("doc_id"))
+            .select(col("doc_id"), col("text"))
+        }
+        val curatedNew = members
+          .join(batchText
+              .unionByName(prevCur.select(col("doc_id"), col("text")))
+              .unionByName(enterText),
+            Seq("doc_id"))
+          .select(col("doc_id"), col("text"), col("detected_lang"),
+            col("quality_score"), col("shard"))
+        PublishState.writeSharded(curatedNew, s"$outDir/curated",
+          keepShardInContent = false, clear = false, carrier = carrier)
+        enterIds.foreach(_.unpersist()); members.unpersist()
       }
-      val curatedNew = members
-        .join(batchText
-            .unionByName(prevCur.select(col("doc_id"), col("text")))
-            .unionByName(enterText),
-          Seq("doc_id"))
-        .select(col("doc_id"), col("text"), col("detected_lang"),
-          col("quality_score"), col("shard"))
-      PublishState.writeSharded(curatedNew, s"$outDir/curated",
-        keepShardInContent = false, clear = false, carrier = carrier)
-      enterIds.foreach(_.unpersist()); members.unpersist()
-    }
 
-    // PACKED: carried shard files + re-pack of exactly the changed
-    // shards (within-shard packing is a pure function of the shard's
-    // member set, so the restriction equals the full run's shards).
-    PublishState.prepareDir(s"$outDir/packed", carrier)
-    PublishState.carryShardsExcept(s"$prevOut/packed", s"$outDir/packed",
-      changedSet, carrier)
-    publishTailProbe("after-carry")
-    val changedCuratedFiles =
-      PublishState.shardFilesFor(s"$outDir/curated", changedSet, carrier)
-    val newBins =
-      if (changedCuratedFiles.nonEmpty) {
-        val cur = spark.read.parquet(changedCuratedFiles: _*)
-        PublishState.writeSharded(
-          DataMix.packSequenceContentsBy(
-            cur.select(col("doc_id"), col("text"),
-              size(tokens(col("text"))).cast("long").as("n_tokens")),
-            "doc_id", "n_tokens", "text",
-            budget = cfg.packBudget, shardOf = cfg.shardOf(col("doc_id"))),
-          s"$outDir/packed", keepShardInContent = true, clear = false,
-          carrier = carrier)
-        val files =
-          PublishState.shardFilesFor(s"$outDir/packed", changedSet, carrier)
-        if (files.nonEmpty) Some(spark.read.parquet(files: _*)) else None
-      } else None
+      // PACKED: carried shard files + re-pack of exactly the changed
+      // shards (within-shard packing is a pure function of the shard's
+      // member set, so the restriction equals the full run's shards).
+      PublishState.prepareDir(s"$outDir/packed", carrier)
+      PublishState.carryShardsExcept(s"$prevOut/packed", s"$outDir/packed",
+        changedSet, carrier)
+      publishTailProbe("after-carry")
+      val changedCuratedFiles =
+        PublishState.shardFilesFor(s"$outDir/curated", changedSet, carrier)
+      val newBins =
+        if (changedCuratedFiles.nonEmpty) {
+          val cur = spark.read.parquet(changedCuratedFiles: _*)
+          PublishState.writeSharded(
+            DataMix.packSequenceContentsBy(
+              cur.select(col("doc_id"), col("text"),
+                size(tokens(col("text"))).cast("long").as("n_tokens")),
+              "doc_id", "n_tokens", "text",
+              budget = cfg.packBudget, shardOf = cfg.shardOf(col("doc_id"))),
+            s"$outDir/packed", keepShardInContent = true, clear = false,
+            carrier = carrier)
+          val files =
+            PublishState.shardFilesFor(s"$outDir/packed", changedSet, carrier)
+          if (files.nonEmpty) Some(spark.read.parquet(files: _*)) else None
+        } else None
 
-    // Degenerate-corpus guard: a publish with no carried files and no
-    // changed rows (zero members anywhere) must still leave readable
-    // empty artifacts, like the full path's empty-write fallback.
-    def ensureReadable(path: String, empty: => DataFrame): Unit = {
-      val hasData =
-        carrier.listFileNames(path).exists(_.endsWith(".parquet"))
-      if (!hasData) Sinks.overwriteParquet(empty, path, numFiles = 1)
-    }
-    ensureReadable(s"$outDir/curated",
-      updated.where(lit(false))
-        .select(col("doc_id"), lit("").as("text"), col("detected_lang"),
-          col("quality_score")))
-    ensureReadable(s"$outDir/packed",
-      DataMix.packSequenceContentsBy(
+      // Degenerate-corpus guard: a publish with no carried files and no
+      // changed rows (zero members anywhere) must still leave readable
+      // empty artifacts, like the full path's empty-write fallback.
+      def ensureReadable(path: String, empty: => DataFrame): Unit = {
+        val hasData =
+          carrier.listFileNames(path).exists(_.endsWith(".parquet"))
+        if (!hasData) Sinks.overwriteParquet(empty, path, numFiles = 1)
+      }
+      ensureReadable(s"$outDir/curated",
         updated.where(lit(false))
-          .select(col("doc_id"), lit("").as("text"), lit(0L).as("n_tokens")),
-        "doc_id", "n_tokens", "text", budget = cfg.packBudget,
-        shardOf = cfg.shardOf(col("doc_id"))))
+          .select(col("doc_id"), lit("").as("text"), col("detected_lang"),
+            col("quality_score")))
+      ensureReadable(s"$outDir/packed",
+        DataMix.packSequenceContentsBy(
+          updated.where(lit(false))
+            .select(col("doc_id"), lit("").as("text"), lit(0L).as("n_tokens")),
+          "doc_id", "n_tokens", "text", budget = cfg.packBudget,
+          shardOf = cfg.shardOf(col("doc_id"))))
 
-    // MANIFEST: carried rows + recomputed rows for the changed shards
-    // (each row is a pure per-shard aggregate of its bins).
-    val prevManifest =
-      PublishState.readPublished(spark, prevOut, "manifest", carrier)
-    val carriedRows =
-      if (changed.isEmpty) prevManifest
-      else prevManifest.where(!col("shard").isin(changed: _*))
-    val manifest = newBins match {
-      case Some(b) =>
-        carriedRows.unionByName(
-          DataMix.shardManifest(b).join(
-            DataMix.packingEfficiency(b, cfg.packBudget)
-              .select(col("shard"), col("capacity_tokens"), col("fill_ratio")),
-            Seq("shard")))
-      case None => carriedRows
+      // MANIFEST: carried rows + recomputed rows for the changed shards
+      // (each row is a pure per-shard aggregate of its bins).
+      val prevManifest =
+        PublishState.readPublished(spark, prevOut, "manifest", carrier)
+      val carriedRows =
+        if (changed.isEmpty) prevManifest
+        else prevManifest.where(!col("shard").isin(changed: _*))
+      val manifest = newBins match {
+        case Some(b) =>
+          carriedRows.unionByName(
+            DataMix.shardManifest(b).join(
+              DataMix.packingEfficiency(b, cfg.packBudget)
+                .select(col("shard"), col("capacity_tokens"), col("fill_ratio")),
+              Seq("shard")))
+        case None => carriedRows
+      }
+      publishTailProbe("before-manifest")
+      Sinks.overwriteParquet(manifest, s"$outDir/manifest", numFiles = 1)
+      spark.read.parquet(s"$outDir/manifest")
+        .agg(coalesce(sum(col("n_bins")), lit(0L))).head().getLong(0)
     }
-    publishTailProbe("before-manifest")
-    Sinks.overwriteParquet(manifest, s"$outDir/manifest", numFiles = 1)
 
-    // Next week's state: the correction slice, the incrementally
-    // merged fingerprints (pinned == full recompute), the composed
-    // totals, and the meta pointing at THIS publish.
-    PublishState.writeLedgerSlice(updated, stateOutDir, v = lineageOld.size)
-    // Fingerprint DELTA slice only (VERDICT r12 item 4): the weekly
-    // path neither reads nor rewrites the composed table — readers
-    // compose the newest full table (init/rebase) with the delta
-    // slices, pinned equal to the from-scratch recompute at every
-    // version. The evAgg rows already ARE the deltas.
-    PublishState.writeFingerprintDelta(evAgg, stateOutDir)
+    // Next week's state, after the joined slices: the composed totals
+    // and the meta pointing at THIS publish.
     PublishState.writeMeta(stateOutDir, cfg, outDir, carrier)
     val tPrev = PublishState.readTotals(stateInDir, carrier)
     def dsum(f: String): Long = evRows.map(_.getAs[Long](f)).sum
@@ -1541,12 +1537,10 @@ object CurationRun {
         "paying toward full-publish cost; see Stats.nShardsOverlap)")
 
     // Audit: the composed totals replace the corpus-frame counts
-    // one-for-one; bins from the landed manifest (tiny read).
-    val c = foldCounts(Seq("input" -> newDocs) ++ front.audits)
-    val bins = spark.read.parquet(s"$outDir/manifest")
-      .agg(coalesce(sum(col("n_bins")), lit(0L))).head().getLong(0)
-    // batchBase/prevStanding/updated are localCheckpoint blocks, not
-    // cache entries — they release via ContextCleaner on GC.
+    // one-for-one; input and front counts come from the folded branch,
+    // bins from the landed manifest. batchBase/touched/updated are
+    // localCheckpoint blocks, not cache entries — they release via
+    // ContextCleaner on GC.
     evAgg.unpersist()
     Stats(input = c("input"), gated = -1L, modelGated = -1L,
       decontaminated = totals.nDocs,
@@ -1558,6 +1552,39 @@ object CurationRun {
       nShardsChanged = changed.size.toLong,
       nShardsCarried = nCarried.toLong,
       nShardsOverlap = nOverlap)
+  }
+
+  /** The docs whose membership flags the batch can move, each with its
+    * dedup and semantic cluster: (doc_id, dcanon, scanon). Rows are
+    * (1) the batch, (2) every member of a dedup cluster holding a
+    * batch doc, and (3) every member of a semantic cluster holding a
+    * doc from (1) or (2) — a superset of the clusters
+    * [[deltaLedgerRows]] re-picks, since every surv-changeable doc is
+    * in (2). `dcanon` is set exactly on (2) (a batch doc in a cluster
+    * is in (2)), so a non-null `dcanon` marks a touched dedup cluster
+    * whose members are all present; `scanon` is set exactly on (3),
+    * whose clusters are likewise complete. Batch-scale under bounded
+    * cluster sizes. */
+  private def touchedDocs(batchBase: DataFrame, clusters: DataFrame,
+      semLabels: Option[DataFrame]): DataFrame = {
+    val batchIds = batchBase.select(col("doc_id"))
+    val dAll = clusters.select(col("doc_id"), col("canonical_id").as("dcanon"))
+    val dMembers = dAll.join(
+      dAll.join(batchIds, Seq("doc_id")).select(col("dcanon")).distinct(),
+      Seq("dcanon"))
+    val seed = batchIds.join(dMembers, Seq("doc_id"), "left")
+      .unionByName(dMembers.select(col("doc_id"), col("dcanon")))
+      .distinct()
+    semLabels match {
+      case None => seed.withColumn("scanon", lit(null).cast("long"))
+      case Some(l) =>
+        val sAll = l.select(col("doc_id"), col("canonical_id").as("scanon"))
+        val sMembers = sAll.join(
+          sAll.join(seed.select(col("doc_id")), Seq("doc_id"))
+            .select(col("scanon")).distinct(),
+          Seq("scanon"))
+        seed.join(sMembers, Seq("doc_id"), "full_outer")
+    }
   }
 
   /** Membership-flag recompute for the delta publisher: batch rows
@@ -1574,100 +1601,76 @@ object CurationRun {
     * [[TextDedup.dedupSurvivors]]' max(struct(quality, -id)) and
     * [[semanticKeepFilter]]'s lowest-KEPT-id survivor.
     *
-    * `prevLedger` is the PRUNED standing restriction
-    * ([[PublishState.composeLedgerPruned]] over the caller's
-    * touched-doc superset), not the corpus compose: every doc this
-    * recompute joins it on (touched dedup-cluster members, touched
-    * sem-cluster members, oldIds) is inside that superset by
-    * construction, and extra same-bucket rows are inert under the
-    * doc_id equi-joins. */
-  private def deltaLedgerRows(batchBase: DataFrame, prevLedger: DataFrame,
-      clusters: DataFrame, semLabels: Option[DataFrame]): DataFrame = {
-    val batchIds = batchBase.select(col("doc_id"))
-    val touchedCanon = clusters.join(batchIds, Seq("doc_id"))
-      .select(col("canonical_id")).distinct()
-    val membersD = clusters.join(touchedCanon, Seq("canonical_id"))
-      .select(col("doc_id"), col("canonical_id"))
-    val qual = prevLedger.select(col("doc_id"), col("quality_score"))
-      .unionByName(batchBase.select(col("doc_id"), col("quality_score")))
-    val survivors = membersD.join(qual, Seq("doc_id"))
-      .groupBy(col("canonical_id"))
+    * One frame drives it: `touched` ([[touchedDocs]]) joined once with
+    * the standing rows (`prevLedger`, the PRUNED compose over
+    * `touched`'s ids — extra same-bucket rows are inert under the
+    * doc_id join) and the batch's base rows, then one aggregate per
+    * survivor rule, each joined back on its cluster id. The result is
+    * the batch rows plus the old rows (those with a standing ledger
+    * row) whose dedup cluster or re-picked semantic cluster is
+    * touched, each carrying its previous surv/semok/member values
+    * (`__os`/`__ok`/`__om`, and `__old` = true) for the event
+    * aggregate. */
+  private def deltaLedgerRows(touched: DataFrame, batchBase: DataFrame,
+      prevLedger: DataFrame, semOn: Boolean): DataFrame = {
+    val baseCols = Seq("quality_score", "detected_lang", "n_tokens",
+      "sampled", "shard")
+    val isBatch = coalesce(col("__batch"), lit(false))
+    val isOld = coalesce(col("__old"), lit(false))
+    val rows = touched
+      .join(batchBase.select((col("doc_id") +: baseCols.map(c =>
+          col(c).as(s"__b_$c")) :+ lit(true).as("__batch")): _*),
+        Seq("doc_id"), "left")
+      .join(prevLedger.select((col("doc_id") +: baseCols.map(c =>
+          col(c).as(s"__p_$c")) :+ col("surv").as("__os") :+
+          col("semok").as("__ok") :+ col("member").as("__om") :+
+          lit(true).as("__old")): _*),
+        Seq("doc_id"), "left")
+      .select((Seq(col("doc_id"), col("dcanon"), col("scanon"),
+          col("__batch"), col("__old"), col("__os"), col("__ok"),
+          col("__om")) ++
+        baseCols.map(c => coalesce(col(s"__b_$c"), col(s"__p_$c")).as(c))): _*)
+    // Dedup survivor per touched cluster, over the members with a row.
+    val dedupSurv = rows.where(col("dcanon").isNotNull && (isBatch || isOld))
+      .groupBy(col("dcanon"))
       .agg(max(struct(col("quality_score").as("q"),
         (-col("doc_id")).as("negid"))).as("__best"))
-      .select(col("canonical_id"), (-col("__best.negid")).as("survivor_id"))
-    val dedupFlags = membersD.join(survivors, Seq("canonical_id"))
-      .select(col("doc_id"), (col("doc_id") === col("survivor_id")).as("surv"))
-    // Batch rows: clustered docs take the recomputed flag; unclustered
-    // docs are their own survivor (survivorFilter's null branch).
-    val batchFlagged = batchBase
-      .join(dedupFlags.withColumnRenamed("surv", "__ds"), Seq("doc_id"), "left")
-      .withColumn("surv", coalesce(col("__ds"), lit(true)))
-      .drop("__ds")
-    val oldDedup = dedupFlags.join(batchIds, Seq("doc_id"), "left_anti")
-    val semFlags = semLabels match {
-      case None => None
-      case Some(labels0) =>
-        val labels = labels0.select(col("doc_id"), col("canonical_id"))
-        // Seed: the batch plus old docs whose surv flag MOVED (their
-        // sem clusters must re-pick the lowest kept id).
-        val survChanged = oldDedup.as("n")
-          .join(prevLedger.select(col("doc_id"), col("surv").as("__o")),
-            Seq("doc_id"))
-          .where(col("surv") =!= col("__o"))
-          .select(col("doc_id"))
-        val touchedSem = labels
-          .join(batchIds.unionByName(survChanged).distinct(), Seq("doc_id"))
-          .select(col("canonical_id")).distinct()
-        val membersS = labels.join(touchedSem, Seq("canonical_id"))
-        // Current surv per member: recomputed where known, else the
-        // ledger's standing value.
-        val knownSurv = batchFlagged.select(col("doc_id"), col("surv"))
-          .unionByName(oldDedup)
-        val sSurv = membersS
-          .join(knownSurv.withColumnRenamed("surv", "__k"),
-            Seq("doc_id"), "left")
-          .join(prevLedger.select(col("doc_id"), col("surv").as("__p")),
-            Seq("doc_id"), "left")
-          .withColumn("__cur", coalesce(col("__k"), col("__p")))
-        val semSurv = sSurv.where(col("__cur"))
-          .groupBy(col("canonical_id")).agg(min(col("doc_id")).as("surv_id"))
-        Some(sSurv.join(semSurv, Seq("canonical_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("doc_id") === col("surv_id"), lit(false))
-              .as("semok")))
-    }
-    val batchRows = (semFlags match {
-      case None => batchFlagged.withColumn("semok", lit(true))
-      case Some(sf) =>
-        // Labeled batch docs are always in a touched cluster (their
-        // own); unlabeled pass through (semanticKeepFilter's null
-        // branch).
-        batchFlagged
-          .join(sf.withColumnRenamed("semok", "__sk"), Seq("doc_id"), "left")
-          .withColumn("semok", coalesce(col("__sk"), lit(true)))
-          .drop("__sk")
-    }).select(col("doc_id"), col("quality_score"), col("detected_lang"),
-      col("n_tokens"), col("sampled"), col("surv"), col("semok"),
-      col("shard"))
-    val oldIds = (semFlags match {
-      case None => oldDedup.select(col("doc_id"))
-      case Some(sf) => oldDedup.select(col("doc_id"))
-        .unionByName(sf.select(col("doc_id"))
-          .join(batchIds, Seq("doc_id"), "left_anti"))
-    }).distinct()
-    val oldRows = oldIds
-      .join(prevLedger, Seq("doc_id"))
-      .join(oldDedup.withColumnRenamed("surv", "__ns"), Seq("doc_id"), "left")
-      .join(semFlags.getOrElse(
-          batchIds.where(lit(false)).withColumn("semok", lit(true)))
-          .withColumnRenamed("semok", "__nk"),
-        Seq("doc_id"), "left")
+      .select(col("dcanon"), (-col("__best.negid")).as("__sid"))
+    // `__ds` = the recomputed flag (null outside a touched cluster);
+    // `surv` = the current flag: recomputed where known, else the
+    // standing value — an unclustered batch doc is its own survivor.
+    val dedup = rows.join(dedupSurv, Seq("dcanon"), "left")
+      .withColumn("__ds",
+        when(col("__sid").isNotNull, col("doc_id") === col("__sid")))
+      .withColumn("surv",
+        when(isBatch, coalesce(col("__ds"), lit(true)))
+          .otherwise(coalesce(col("__ds"), col("__os"))))
+    // Semantic re-pick of every cluster holding a batch doc or an old
+    // doc whose surv flag moved: lowest kept id survives.
+    val flagged =
+      if (!semOn) dedup.withColumn("__sk", lit(null).cast("boolean"))
+      else {
+        val survChanged = !isBatch && isOld &&
+          coalesce(col("__ds") =!= col("__os"), lit(false))
+        val semSurv = dedup.where(col("scanon").isNotNull)
+          .groupBy(col("scanon"))
+          .agg(max(isBatch || survChanged).as("__st"),
+            min(when(col("surv"), col("doc_id"))).as("__ssid"))
+          .where(col("__st"))
+        dedup.join(semSurv, Seq("scanon"), "left")
+          .withColumn("__sk", when(col("__st"),
+            coalesce(col("doc_id") === col("__ssid"), lit(false))))
+      }
+    flagged
+      .where(isBatch ||
+        (isOld && (col("__ds").isNotNull || col("__sk").isNotNull)))
+      .withColumn("semok",
+        when(isBatch, coalesce(col("__sk"), lit(true)))
+          .otherwise(coalesce(col("__sk"), col("__ok"))))
       .select(col("doc_id"), col("quality_score"), col("detected_lang"),
-        col("n_tokens"), col("sampled"),
-        coalesce(col("__ns"), col("surv")).as("surv"),
-        coalesce(col("__nk"), col("semok")).as("semok"),
-        col("shard"))
-    batchRows.unionByName(oldRows)
+        col("n_tokens"), col("sampled"), col("surv"), col("semok"),
+        col("shard"), col("__os"), col("__ok"), col("__om"),
+        col("__old"))
       .withColumn("member", col("surv") && col("semok") && col("sampled"))
   }
 
@@ -1749,7 +1752,7 @@ object CurationRun {
       s"$stateOutDir/decon_batch", "doc_id", buckets = 8)
     StateLayout.writeBucketed(StateLayout.readSlices(spark, lineage, "index_batch"),
       s"$stateOutDir/index_batch", "doc_id")
-    Sinks.overwriteParquet(StateLayout.readSlices(spark, lineage, "signatures_batch"),
+    StateLayout.writeState(StateLayout.readSlices(spark, lineage, "signatures_batch"),
       s"$stateOutDir/signatures_batch", numFiles = 4)
     // Banding consolidates as pure IO where slices exist; pre-bands
     // lineage dirs re-derive from their signature slices ONCE here —
@@ -1763,7 +1766,7 @@ object CurationRun {
     // reads batch-proportional between rebases.
     StateLayout.writeBucketed(StateLayout.readSlices(spark, lineage, "hash_batch"),
       s"$stateOutDir/hash_batch", "content_hash")
-    Sinks.overwriteParquet(spark.read.parquet(s"$stateInDir/clusters"),
+    StateLayout.writeState(StateLayout.readState(spark, s"$stateInDir/clusters"),
       s"$stateOutDir/clusters", numFiles = 1)
     // Semantic state, when present. Default rebase is pure IO: cell
     // slices consolidate like the other per-batch artifacts and the
@@ -1801,7 +1804,7 @@ object CurationRun {
     if (annStateActive(stateInDir)) {
       StateLayout.writeBucketed(StateLayout.readSlices(spark, lineage, "ann_codes_batch"),
         s"$stateOutDir/ann_codes_batch", "cell")
-      Sinks.overwriteParquet(spark.read.parquet(s"$stateInDir/ann_model"),
+      StateLayout.writeState(StateLayout.readState(spark, s"$stateInDir/ann_model"),
         s"$stateOutDir/ann_model", numFiles = 1)
     }
     if (java.nio.file.Files.exists(
@@ -1809,7 +1812,7 @@ object CurationRun {
       if (retrainSemantic) {
         val emb = embeddings.get
         val vecs = embeddedVecs(
-          spark.read.parquet(s"$stateOutDir/decon_batch"), emb)
+          StateLayout.readSlice(spark, s"$stateOutDir/decon_batch"), emb)
         val cen = VectorSim.kmeansCentroids(vecs, semClusters, semIters)
         writeSemCentroids(spark, stateOutDir, cen)
         java.nio.file.Files.writeString(
@@ -1821,11 +1824,11 @@ object CurationRun {
         // summary under the NEW centroids is one extra aggregate over
         // vectors already in hand — the consolidated baseline every
         // later drift decision compares batches against.
-        Sinks.overwriteParquet(VectorSim.quantizerFitSlice(vecs, cen),
+        StateLayout.writeState(VectorSim.quantizerFitSlice(vecs, cen),
           s"$stateOutDir/sem_fit_batch", numFiles = 1)
         val cellsS = StateLayout.readSlice(spark,
           s"$stateOutDir/sem_cells_batch")
-        Sinks.overwriteParquet(
+        StateLayout.writeState(
           TextDedup.connectedComponents(VectorSim.semanticPairsIncremental(
             cellsS, emb, cellsS.select(col("vec_id")), semThreshold)),
           s"$stateOutDir/sem_clusters", numFiles = 1)
@@ -1836,7 +1839,7 @@ object CurationRun {
         // quantizer is unchanged, and decimal distance sums add
         // exactly, so one summed row == the union of slice rows for
         // every later decision.
-        Sinks.overwriteParquet(
+        StateLayout.writeState(
           semFitFrames(spark, lineage, stateInDir, embeddings)
             .agg(
               coalesce(sum(col("n_vectors")), lit(0L)).as("n_vectors"),
@@ -1844,9 +1847,9 @@ object CurationRun {
                 .cast("decimal(38,6)").as("sum_dist"),
               max(col("max_dist")).as("max_dist")),
           s"$stateOutDir/sem_fit_batch", numFiles = 1)
-        Sinks.overwriteParquet(spark.read.parquet(s"$stateInDir/sem_centroids"),
+        StateLayout.writeState(StateLayout.readState(spark, s"$stateInDir/sem_centroids"),
           s"$stateOutDir/sem_centroids", numFiles = 1)
-        Sinks.overwriteParquet(spark.read.parquet(s"$stateInDir/sem_clusters"),
+        StateLayout.writeState(StateLayout.readState(spark, s"$stateInDir/sem_clusters"),
           s"$stateOutDir/sem_clusters", numFiles = 1)
         java.nio.file.Files.copy(
           java.nio.file.Paths.get(s"$stateInDir/sem_salt.txt"),
@@ -1906,8 +1909,8 @@ object CurationRun {
     // multi-path read, not |lineage| separate reads.
     val summaries =
       if (withSummary.isEmpty) Nil
-      else Seq(spark.read
-        .parquet(withSummary.map(d => s"$d/sem_fit_batch"): _*)
+      else Seq(StateLayout.readState(spark,
+          withSummary.map(d => s"$d/sem_fit_batch"): _*)
         .select(cols: _*))
     val rescored = preSummary.map { d =>
       val emb = embeddings.getOrElse(throw new IllegalStateException(
@@ -1916,7 +1919,7 @@ object CurationRun {
           "supplied to re-score it — pass the corpus embeddings or " +
           "rebase the state to backfill the summary"))
       VectorSim.quantizerFitSlice(
-        emb.join(spark.read.parquet(s"$d/sem_cells_batch")
+        emb.join(StateLayout.readSlice(spark, s"$d/sem_cells_batch")
           .select(col("vec_id")), "vec_id"), cen)
         .select(cols: _*)
     }

@@ -328,7 +328,7 @@ object LmState {
       StateLayout.writeBucketed(
         StateLayout.readSlices(spark, withIds, "doc_ids_batch"),
         s"$stateOutDir/doc_ids_batch", "doc_id")
-    val v = spark.read.parquet(s"$stateOutDir/prefix_counts_batch").count()
+    val v = StateLayout.readSlice(spark, s"$stateOutDir/prefix_counts_batch").count()
     writeMeta(stateOutDir, orderOf(stateInDir), v)
     StateLayout.writeLineage(stateOutDir, Seq(stateOutDir))
   }

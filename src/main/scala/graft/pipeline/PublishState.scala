@@ -256,8 +256,7 @@ object PublishState {
 
   def writeFingerprints(spark: SparkSession, fps: DataFrame,
       stateOutDir: String): Unit =
-    graft.sources.Sinks.overwriteParquet(fps,
-      s"$stateOutDir/publish_shards", numFiles = 1)
+    StateLayout.writeState(fps, s"$stateOutDir/publish_shards", numFiles = 1)
 
   /** Land one increment's per-shard fingerprint DELTAS (shard, dn,
     * dfp — batch-scale: only shards with ≥1 membership event carry a
@@ -268,7 +267,7 @@ object PublishState {
     * written only at init/rebase/full-publish and readers composing
     * base + deltas ([[composeFingerprints]]). */
   def writeFingerprintDelta(deltas: DataFrame, stateOutDir: String): Unit =
-    graft.sources.Sinks.overwriteParquet(
+    StateLayout.writeState(
       deltas.select(col("shard"), col("dn"), col("dfp")),
       s"$stateOutDir/publish_shards_delta", numFiles = 1)
 
@@ -286,14 +285,14 @@ object PublishState {
       java.nio.file.Paths.get(s"$d/publish_shards")))
     require(baseIdx >= 0,
       s"no publish_shards base table anywhere in lineage $lineage")
-    val base = spark.read.parquet(s"${lineage(baseIdx)}/publish_shards")
+    val base = StateLayout.readState(spark, s"${lineage(baseIdx)}/publish_shards")
     val deltaDirs = lineage.drop(baseIdx + 1)
       .filter(d => java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$d/publish_shards_delta")))
     if (deltaDirs.isEmpty) base
     else mergeFingerprints(base,
-      spark.read
-        .parquet(deltaDirs.map(d => s"$d/publish_shards_delta"): _*)
+      StateLayout.readState(spark,
+          deltaDirs.map(d => s"$d/publish_shards_delta"): _*)
         .groupBy(col("shard"))
         .agg(sum(col("dn")).as("dn"), sum(col("dfp")).as("dfp")))
   }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bucketed state-slice layout + key-pushdown scan pruning for the
   * weekly cadences (VERDICT r09 item 1).
@@ -52,6 +53,14 @@ import org.apache.spark.sql.functions._
   * bucketed layout at the next rebase — pre-upgrade lineages degrade,
   * never break.
   *
+  * Every artifact this object lands also records its schema in a
+  * `_graft_schema` sidecar (Spark's JSON schema form, beside
+  * `_graft_buckets`), and every read here passes it to the reader:
+  * building a parquet DataFrame without a schema runs one
+  * schema-inference Spark job per read (a parallel footer merge), and
+  * a cadence run reads dozens of artifacts whose schema it wrote
+  * itself. Artifacts written without the sidecar read with inference.
+  *
   * The bucket hash canonicalizes the key through a STRING cast:
   * Spark's murmur3 hashes int 5 and long 5L to different values, and
   * slice key types legitimately differ across artifacts (md5 strings,
@@ -70,6 +79,7 @@ object StateLayout {
   val DefaultBuckets = 32
 
   private val MarkerFile = "_graft_buckets"
+  private val SchemaFile = "_graft_schema"
   private[pipeline] val BucketCol = "bucket"
 
   /** The write/probe bucket of a key — identical expression on both
@@ -156,16 +166,50 @@ object StateLayout {
       try s.anyMatch(p => p.getFileName.toString.startsWith(s"$BucketCol="))
       finally s.close()
     }
-    if (wroteData)
+    if (wroteData) {
+      recordSchema(path, df.schema)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(path, MarkerFile), s"$buckets\n")
-    else
-      graft.sources.Sinks.overwriteParquet(df, path, numFiles = 1)
+    } else writeState(df, path, numFiles = 1)
+  }
+
+  /** Land one plain (unbucketed) state artifact as `numFiles` parquet
+    * files plus its schema sidecar. */
+  def writeState(df: DataFrame, path: String, numFiles: Int): Unit = {
+    graft.sources.Sinks.overwriteParquet(df, path, numFiles)
+    recordSchema(path, df.schema)
+  }
+
+  private def recordSchema(path: String, schema: StructType): Unit =
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(path, SchemaFile), schema.json)
+
+  /** The schema an artifact was landed with; None = written before
+    * the sidecar existed. */
+  def schemaOf(path: String): Option[StructType] = {
+    val p = java.nio.file.Paths.get(path, SchemaFile)
+    if (java.nio.file.Files.exists(p))
+      Some(DataType.fromJson(java.nio.file.Files.readString(p))
+        .asInstanceOf[StructType])
+    else None
+  }
+
+  /** Read plain state artifact dirs (one multi-path read) under their
+    * recorded schema — no inference job. Falls back to inference when
+    * any dir lacks the sidecar or the recorded schemas differ. A
+    * bucketed dir read this way keeps its `bucket` column. */
+  def readState(spark: SparkSession, paths: String*): DataFrame = {
+    val schemas = paths.map(schemaOf).distinct
+    val reader = schemas match {
+      case Seq(Some(s)) => spark.read.schema(s)
+      case _ => spark.read
+    }
+    reader.parquet(paths: _*)
   }
 
   /** Read one slice dir regardless of layout (bucket column dropped). */
   def readSlice(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = readState(spark, path)
     if (bucketsOf(path).isDefined) df.drop(BucketCol) else df
   }
 
@@ -184,8 +228,8 @@ object StateLayout {
   def readSlicePaths(spark: SparkSession, paths: Seq[String]): DataFrame = {
     val (bucketed, legacy) = paths.partition(p => bucketsOf(p).isDefined)
     val parts =
-      bucketed.map(p => spark.read.parquet(p).drop(BucketCol)) ++
-        (if (legacy.nonEmpty) Seq(spark.read.parquet(legacy: _*)) else Nil)
+      bucketed.map(p => readSlice(spark, p)) ++
+        (if (legacy.nonEmpty) Seq(readState(spark, legacy: _*)) else Nil)
     parts.reduce(_ unionByName _)
   }
 
@@ -212,11 +256,11 @@ object StateLayout {
     }.toMap
     val parts =
       bucketed.map { p =>
-        spark.read.parquet(p)
+        readState(spark, p)
           .where(col(BucketCol).isin(hitByB(bucketsOf(p).get): _*))
           .drop(BucketCol)
       } ++
-        (if (legacy.nonEmpty) Seq(spark.read.parquet(legacy: _*)) else Nil)
+        (if (legacy.nonEmpty) Seq(readState(spark, legacy: _*)) else Nil)
     parts.reduce(_ unionByName _)
   }
 }

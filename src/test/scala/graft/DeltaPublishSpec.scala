@@ -30,8 +30,10 @@ class DeltaPublishSpec extends AnyFunSuite {
   //  - inc1 batch doc 11 (shard 2): doc 1's text + six extra tokens
   //    -> 22 tokens, quality 1.0, 3-gram Jaccard vs doc 1 = 14/20 —
   //    displaces 1 as dedup survivor; sem cluster {1, 2}'s kept
-  //    members become {2}, so 2 RE-SURFACES. Changed shards: 0
-  //    (1 leaves, 2 enters) and 2 (11 appends); shard 1 carries.
+  //    members become {2}, so 2 RE-SURFACES. 11 has no embedding, so
+  //    that semantic re-pick is seeded only by 1's surv flip.
+  //    Changed shards: 0 (1 leaves, 2 enters) and 2 (11 appends);
+  //    shard 1 carries.
   //  - inc2 batch doc 14 (shard 3): its own NEW shard — range
   //    sharding keeps a pure-append week from touching ANY old
   //    shard; 0, 1, 2 all carry.
@@ -369,6 +371,54 @@ class DeltaPublishSpec extends AnyFunSuite {
     assert(curatedSet(s"$base/out3") == curatedSet(s"$clean/out3") &&
       manifestSet(s"$base/out3") == manifestSet(s"$clean/out3"),
       "the full-path self-heal must converge bit-equal to the clean chain")
+  }
+
+  test("a crash in the publish chain joins the tail's state branches: " +
+      "no branch outlives the call, the ledger slice is whole or absent") {
+    // The ledger slice, the fingerprint delta and the audit fold run on
+    // driver threads beside the curated -> packed -> manifest chain; a
+    // failure in the chain must join them before it reaches the
+    // caller, so no writer is still landing files into stateOutDir.
+    val base = TestSpark.tmpDir("delta_pub_branch_crash")
+    val clean = TestSpark.tmpDir("delta_pub_branch_ref")
+    runChain(clean, forceFull = false)
+    def docs(s: Seq[(Long, String)]) = s.toDF("doc_id", "text")
+    def inc(n: Int, batch: Seq[(Long, String)]) =
+      CurationRun.runIncremental(docs(batch), benchmark,
+        s"$base/out$n", s"$base/s${n - 1}", s"$base/s$n", minQuality = 0.0,
+        embeddings = Some(emb), semThreshold = 0.9, publishSpan = 4L,
+        packBudget = 64L)
+    CurationRun.runInit(docs(initDocs), benchmark,
+      s"$base/out0", s"$base/s0", minQuality = 0.0,
+      embeddings = Some(emb), semClusters = 2, semIters = 2,
+      semThreshold = 0.9, semanticState = true, publishSpan = 4L,
+      packBudget = 64L)
+    CurationRun.publishTailProbe = {
+      case "after-carry" => throw new RuntimeException("injected crash")
+      case _ => ()
+    }
+    try intercept[RuntimeException] { inc(1, inc1Docs) }
+    finally CurationRun.publishTailProbe = _ => ()
+    import scala.jdk.CollectionConverters._
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName == "graft-state-branch" && t.isAlive)
+    assert(alive.isEmpty, s"branch threads outlived the failed call: $alive")
+    def ledger(stateDir: String) =
+      StateLayout.readSlice(spark, s"$stateDir/publish_ledger_batch")
+        .collect().toSet
+    if (java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$base/s1/publish_ledger_batch")))
+      assert(ledger(s"$base/s1") == ledger(s"$clean/s1"),
+        "a ledger slice left by the failed call must be complete")
+    assert(!PublishState.isComplete(s"$base/out1"))
+    // The re-run converges bit-equal to the never-crashed chain.
+    inc(1, inc1Docs)
+    assert(PublishState.isComplete(s"$base/out1"))
+    assert(curatedSet(s"$base/out1") == curatedSet(s"$clean/out1") &&
+      packedSet(s"$base/out1") == packedSet(s"$clean/out1") &&
+      manifestSet(s"$base/out1") == manifestSet(s"$clean/out1"),
+      "the re-run after a crash must converge bit-equal")
+    assert(ledger(s"$base/s1") == ledger(s"$clean/s1"))
   }
 
   test("non-monotonic batch trips the range-premise tripwire; publish correct") {

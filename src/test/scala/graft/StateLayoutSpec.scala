@@ -14,7 +14,9 @@ import graft.pipeline.StateLayout
   * scan; (3) legacy (pre-layout) slices compose and degrade to full
   * scans; (4) an empty slice still round-trips a schema; (5) the
   * bucket hash is key-WIDTH-insensitive (int probe vs long write),
-  * the exactness precondition.
+  * the exactness precondition; (6) reads take the recorded schema
+  * sidecar instead of inferring one, and degrade to inference without
+  * it.
   */
 class StateLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -133,5 +135,64 @@ class StateLayoutSpec extends AnyFunSuite {
       pruned.join(probes, Seq("cell")).count() ===
         cells.where(col("cell").isin(3, 5)).count(),
       "a width-sensitive bucket hash would silently drop matching rows")
+  }
+
+  /** A frame whose schema inference could get wrong: nested, decimal,
+    * and NOT NULL columns. */
+  private def typed(n: Long) =
+    spark.range(n).select(col("id").as("doc_id"),
+      array(col("id"), col("id") + 1).as("ids"),
+      struct(col("id").cast("string").as("s"), lit(1.5).as("d")).as("st"),
+      col("id").cast("decimal(38,0)").as("fp"))
+
+  private def stripNulls(t: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    t match {
+      case StructType(fs) => StructType(fs.map(f =>
+        StructField(f.name, stripNulls(f.dataType))))
+      case ArrayType(e, _) => ArrayType(stripNulls(e))
+      case MapType(k, v, _) => MapType(stripNulls(k), stripNulls(v))
+      case other => other
+    }
+  }
+
+  test("state reads build their DataFrame without a Spark job") {
+    val dir = TestSpark.tmpDir("slayout_nojobs")
+    StateLayout.writeBucketed(slice(500, 0), s"$dir/d1/art", "h")
+    StateLayout.writeBucketed(slice(0, 0), s"$dir/d2/art", "h")
+    StateLayout.writeState(typed(20), s"$dir/plain", numFiles = 2)
+    val jobs = TestSpark.jobsOf {
+      StateLayout.readSlice(spark, s"$dir/d1/art")
+      StateLayout.readSlices(spark, Seq(s"$dir/d1", s"$dir/d2"), "art")
+      StateLayout.readState(spark, s"$dir/plain")
+    }
+    assert(jobs === 0,
+      "a state read must take the recorded schema, not infer one")
+  }
+
+  test("a slice without its schema sidecar reads the same rows by inference") {
+    val dir = TestSpark.tmpDir("slayout_nosidecar")
+    StateLayout.writeBucketed(slice(500, 0), s"$dir/art", "h")
+    val before = StateLayout.readSlice(spark, s"$dir/art")
+      .as[(Long, Long)].collect().toSet
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(s"$dir/art/_graft_schema"))
+    assert(StateLayout.schemaOf(s"$dir/art") === None)
+    val after = StateLayout.readSlice(spark, s"$dir/art")
+    assert(after.columns.toSeq === Seq("h", "n_docs"))
+    assert(after.as[(Long, Long)].collect().toSet === before)
+  }
+
+  test("the recorded schema equals the written frame's, up to nullability") {
+    val dir = TestSpark.tmpDir("slayout_schema")
+    val df = typed(30)
+    StateLayout.writeState(df, s"$dir/plain", numFiles = 1)
+    StateLayout.writeBucketed(df, s"$dir/bucketed", "doc_id")
+    for (back <- Seq(StateLayout.readState(spark, s"$dir/plain"),
+        StateLayout.readSlice(spark, s"$dir/bucketed"))) {
+      assert(stripNulls(back.schema) === stripNulls(df.schema))
+      assert(back.collect().toSet === df.collect().toSet)
+    }
   }
 }

@@ -31,6 +31,30 @@ object TestSpark {
     "spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"))
 
+  /** Spark jobs `body` launches: counted under a job tag this thread
+    * adds (driver-thread branches inherit it), after the listener bus
+    * drains. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"graft-test-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag)))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+      org.apache.spark.graft.SparkShims.waitUntilListenerBusEmpty(spark, 30000L)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Fresh temp dir under target/ (kept out of git). */
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
