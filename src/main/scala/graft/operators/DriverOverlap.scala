@@ -1,63 +1,100 @@
 package graft.operators
 
+import java.util.concurrent.{ConcurrentLinkedDeque, ExecutionException, FutureTask}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.SparkSession
+
 /** Overlap independent state-write branches on driver threads (guide
   * §2.6 — submit independent jobs concurrently so each job's stage
   * tail back-fills the others): a state-writing pass is a sequence of
   * SMALL actions whose per-job scheduling/AQE floors, not CPU,
-  * dominate at batch scale. Branches run on FRESH threads
-  * (SparkContext's InheritableThreadLocal properties — job tags,
-  * description — carry over from the calling thread); ALL branches
-  * complete before the first failure rethrows, so no branch's
-  * in-flight writes race the caller's cleanup.
+  * dominate at batch scale.
   *
-  * Caller rules (the r14 discipline): branch DAGs must be independent
-  * — in particular, two branches must not race to first-materialize
-  * the same unpersisted or persisted-but-cold parent, or they
-  * duplicate its compute; materialize shared parents before
-  * overlapping. Used by the curation cadence's state groups and the
-  * retrieval-state writers; same-session A/Bs in OPTIMIZATION_r14.md.
+  * The one primitive is a [[scope]]: `DriverOverlap.scope { s => ... }`.
+  * Inside it, `s.fork(body)` starts `body` on a fresh
+  * `graft-state-branch` thread and returns its join handle, and
+  * `s.release(hook)` registers a cache release. When the block exits
+  * — normally or by a throw — the scope joins every fork, then runs
+  * every release (last registered first), each even if an earlier one
+  * failed, and rethrows one failure: the block's own over a fork's,
+  * the earliest fork failure over later ones (its cancellations), a
+  * fork's over a release's. So no fork outlives its scope and no
+  * registered cache outlives it either, whatever fails.
+  *
+  * Cancellation: every fork's Spark jobs carry the scope's job tag
+  * (`graft-scope-<n>`; never `pb…`, the benchmark harness's span tags),
+  * with interrupt-on-cancel. Once anything in the scope has failed, the
+  * scope cancels that tag — repeatedly, until every fork has joined —
+  * so a failed run stops its branches instead of waiting them out.
+  * Forks inherit the calling thread's job tags and local properties
+  * (SparkContext's InheritableThreadLocal), so a scope opened inside a
+  * fork is cancelled with its parent.
+  *
+  * Caller rule: fork bodies must not race to FIRST-materialize the
+  * same persisted-but-cold (or unpersisted) parent — concurrent
+  * first-materialization duplicates its compute. Materialize shared
+  * parents before forking (a count, a localCheckpoint, or the write
+  * that must run first anyway). Same-session A/Bs in
+  * OPTIMIZATION_r14.md.
   */
 object DriverOverlap {
-  /** Launch ONE branch on a fresh driver thread and return its JOIN
-    * hook, which yields the branch's value — the deferred form of
-    * [[overlapped]] for a write (or an eagerly-materialized frame)
-    * whose only ordering constraint is "complete before X" where X is
-    * later than the next statement (e.g. a state-slice write that must
-    * land before the shared cache releases, but is independent of the
-    * stages in between). Same caller rules: the branch must not race a
-    * cold shared parent — materialize it first. The join hook rethrows
-    * the branch's failure; call it on every path that needs the write
-    * durable (a caller failure path that skips the join only abandons
-    * an in-flight write into a dir the failed run already makes
-    * unreadable). */
-  def launchValue[A](branch: () => A): () => A = {
-    val t = new java.util.concurrent.FutureTask[A](
-      new java.util.concurrent.Callable[A] { def call(): A = branch() })
-    val th = new Thread(t, "graft-state-branch")
-    th.setDaemon(true); th.start()
-    // Join the THREAD, not only the task: a caller's failure path that
-    // returns from the hook has no branch thread left running.
-    () => {
-      th.join()
-      try t.get() catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
+  private val ids = new AtomicLong(0)
+
+  final class Scope private[DriverOverlap] (sc: Option[SparkContext]) {
+    private val tag = s"graft-scope-${ids.incrementAndGet()}"
+    private val forks = new ConcurrentLinkedDeque[Thread]()
+    // Fork failures in the order they happened: the first is the root
+    // cause, later ones may be its cancellations.
+    private val failures = new ConcurrentLinkedDeque[Throwable]()
+    private val releases = new ConcurrentLinkedDeque[() => Unit]()
+    private def cancel(): Unit = sc.foreach(_.cancelJobsWithTag(tag))
+
+    /** Start `body` on a fresh driver thread whose Spark jobs carry
+      * this scope's tag. Returns its join handle (idempotent): it waits
+      * for the thread to exit, then yields the value or rethrows. */
+    def fork[A](body: => A): () => A = {
+      val task = new FutureTask[A](() =>
+        try { sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }; body }
+        catch { case e: Throwable => failures.add(e); cancel(); throw e })
+      val th = new Thread(task, "graft-state-branch")
+      forks.add(th)
+      th.setDaemon(true); th.start()
+      () => {
+        th.join()
+        try task.get() catch { case e: ExecutionException => throw e.getCause }
       }
+    }
+
+    /** Run `hook` when the scope exits, after every fork has joined. */
+    def release(hook: => Unit): Unit = releases.push(() => hook)
+
+    private[DriverOverlap] def close(main: Option[Throwable]): Unit = {
+      // Once anything failed, cancel — again on every wait: a fork may
+      // have been between jobs when the last cancel went out.
+      forks.forEach { th =>
+        while (th.isAlive) { if (main.isDefined || !failures.isEmpty) cancel(); th.join(50) }
+      }
+      val forkErrs = failures.asScala.toSeq
+      // A main failure rethrown from a join handle is a fork's: it
+      // yields to the fork failure that came first.
+      (main.filterNot(m => forkErrs.exists(_ eq m)).toSeq ++ forkErrs ++
+        releases.asScala.flatMap(h => Try(h()).failed.toOption))
+        .headOption.foreach(e => throw e)
     }
   }
 
-  /** Run EVERY hook, then rethrow the first failure — so a failing
-    * join or release hook cannot skip the ones after it. */
-  def runAll(hooks: Seq[() => Unit]): Unit =
-    hooks.flatMap(h => scala.util.Try(h()).failed.toOption)
-      .headOption.foreach(e => throw e)
-
-  /** Run `main` on this thread with `branches` overlapped on fresh
-    * driver threads; every branch joins before anything rethrows, and
-    * `main`'s own failure wins over a branch's. */
-  def overlapped[A](branches: Seq[() => Unit])(main: => A): A = {
-    val joins = branches.map(b => launchValue(b))
-    val res = scala.util.Try(main)
-    runAll((() => { res.get; () }) +: joins)
+  /** Run `body` with a fresh [[Scope]]; see the object doc for the
+    * exit and failure rules. */
+  def scope[A](body: Scope => A): A = {
+    val s = new Scope(SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext))
+    val res = Try(body(s))
+    s.close(res.failed.toOption)
     res.get
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.tokens
-import graft.operators.TextSearch
+import graft.operators.{DriverOverlap, TextSearch}
 
 /** Weekly-cadence lexical retrieval index (the BM25 twin of the
   * curation state families, q149): per-batch postings state +
@@ -50,7 +50,7 @@ import graft.operators.TextSearch
 object Bm25State {
 
   private def writeSlices(docs: DataFrame, idCol: String, textCol: String,
-      stateOutDir: String, recordIds: Boolean): Unit = {
+      stateOutDir: String, recordIds: Boolean): Unit = DriverOverlap.scope { s =>
     val terms = docs.select(col(idCol).as("doc_id"),
       explode(tokens(col(textCol))).as("tok"))
     // The doc-length frame is doc-scale-compact and read by BOTH
@@ -60,28 +60,23 @@ object Bm25State {
     // the stats write pays no third pass.
     val dl = terms.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
       .persist()
+    s.release(dl.unpersist())
     val postings = terms
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
       .join(dl, "doc_id")
       .select(col("doc_id"), col("tok"), col("tf"), col("dl"))
     // The id artifact's DAG is independent of the postings/stats chain
-    // — overlap it on a driver thread (guide §2.6, r14). The postings
-    // write stays first on the main thread so it alone materializes
-    // the shared `dl` cache (concurrent first-materialization would
-    // duplicate that compute); the stats write then reads it warm.
-    graft.operators.DriverOverlap.overlapped(Seq(
-      () => if (recordIds)
-        StateLayout.writeBucketed(
-          docs.select(StateLayout.castIdStrict(col(idCol)).as("doc_id"))
-            .distinct(),
-          s"$stateOutDir/doc_ids_batch", "doc_id")
-    )) {
-      StateLayout.writeBucketed(postings, s"$stateOutDir/postings_batch", "tok")
-      StateLayout.writeState(
-        dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")),
-        s"$stateOutDir/stats_batch", numFiles = 1)
-    }
-    dl.unpersist()
+    // — fork it (guide §2.6, r14). The postings write stays first on
+    // the main thread so it alone materializes the shared `dl` cache
+    // (concurrent first-materialization would duplicate that compute);
+    // the stats write then reads it warm.
+    if (recordIds) s.fork(StateLayout.writeBucketed(
+      docs.select(StateLayout.castIdStrict(col(idCol)).as("doc_id")).distinct(),
+      s"$stateOutDir/doc_ids_batch", "doc_id"))
+    StateLayout.writeBucketed(postings, s"$stateOutDir/postings_batch", "tok")
+    StateLayout.writeState(
+      dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")),
+      s"$stateOutDir/stats_batch", numFiles = 1)
   }
 
   /** From-scratch index build that WRITES the weekly state.

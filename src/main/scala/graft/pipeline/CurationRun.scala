@@ -43,25 +43,6 @@ import graft.sources.Sinks
   */
 object CurationRun {
 
-  /** Drive the full pass over a testdata SF dir (benchmark = the q47
-    * split: every 97th doc):
-    * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.pipeline.CurationRun"` */
-  def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-curation-run")
-    val docs = graft.Tables.documents(spark, dir)
-    val t0 = System.nanoTime()
-    val stats = run(
-      docs.where(pmod(col("doc_id"), lit(97)) =!= 0),
-      docs.where(pmod(col("doc_id"), lit(97)) === 0),
-      "/tmp/graft_curation_out",
-      minContaminatedShingles =
-        sys.env.getOrElse("SPARK_GRAFT_DECON_MIN", "5").toInt)
-    println(f"curation run: ${(System.nanoTime() - t0) / 1e9}%.1f s  $stats")
-    spark.stop()
-  }
-
   /** Per-stage audit counts. `spanCleaned` = docs that lost at least
     * one repeated span (-1 when the stage didn't run — the state
     * cadences, see [[runInit]]); `semDropped` = docs removed by
@@ -113,7 +94,8 @@ object CurationRun {
     * disposition, and drop non-survivors. Docs WITHOUT an embedding
     * row pass through untouched (the text stages already vetted them);
     * the cell guard caps any skewed cell. Returns the filtered frame
-    * plus the dropped count (-1 when no embeddings were supplied).
+    * plus the dropped count (-1 when no embeddings were supplied); the
+    * persisted drop list releases when scope `s` exits.
     *
     * Both cadences call this AFTER survivor selection on the composed
     * kept frame, so the incremental pin (init+inc == scratch) extends
@@ -125,16 +107,16 @@ object CurationRun {
     * cadence — is BUILT (VERDICT r06 item 3): opt in with
     * `semanticState = true` at [[runInit]]; incrementals auto-detect
     * it (see the incremental-semantic-state block below). */
-  private def semanticStage(kept: DataFrame, embeddings: Option[DataFrame],
-      semClusters: Int, semIters: Int, semThreshold: Double,
-      semMaxCellSize: Int): (DataFrame, Long, () => Unit) = embeddings match {
-    case None => (kept, -1L, () => ())
+  private def semanticStage(s: DriverOverlap.Scope, kept: DataFrame,
+      embeddings: Option[DataFrame], semClusters: Int, semIters: Int,
+      semThreshold: Double, semMaxCellSize: Int): (DataFrame, Long) = embeddings match {
+    case None => (kept, -1L)
     case Some(emb) =>
       val vecs = embeddedVecs(kept, emb)
       // The disposition feeds the audit count and then every output
       // action's anti-join — persist the compact (doc_id) drop list,
-      // not the kept corpus, and hand its release to the caller (the
-      // output tail runs several actions, so an after-first-action
+      // not the kept corpus, and release it with the caller's scope
+      // (the output tail runs several actions, so an after-first-action
       // lease would force the pair join to recompute per action).
       // Scoped dedup (VERDICT r07 item 7): the count below IS the
       // first action over the disposition, so the assignment cache
@@ -146,10 +128,10 @@ object CurationRun {
         .where(col("keep") === 0)
         .select(col("vec_id").as("doc_id"))
         .persist()
+      s.release(dropped.unpersist())
       val nDropped = dropped.count()
       dispRelease()
-      (kept.join(dropped, Seq("doc_id"), "left_anti"), nDropped,
-        () => { dropped.unpersist(); () })
+      (kept.join(dropped, Seq("doc_id"), "left_anti"), nDropped)
   }
 
   // ---------------------------------------------------------------
@@ -233,9 +215,10 @@ object CurationRun {
       s"$stateOutDir/ann_codes_batch", "cell")
   }
 
-  private def annStateActive(stateInDir: String): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$stateInDir/ann_model"))
+  /** Whether state dir `dir` holds the artifact `name` — how the
+    * cadences auto-detect which opt-in state families a lineage has. */
+  private def hasState(dir: String, name: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/$name"))
 
   /** Serve ANN search from the state's persisted index: probe
     * selection + LUT join over the lineage's code slices — a query
@@ -373,13 +356,12 @@ object CurationRun {
   // ---------------------------------------------------------------
 
   /** A stage's deferred-audit handle (VERDICT r09 item 3): the output
-    * frame, the AUDIT frame whose count joins the run's single folded
-    * stats action instead of paying its own job, and the release hook
-    * `afterLand`, which joins the stage's state-slice write and frees
-    * the token-scale intermediates (grams / lines) once the landed
-    * decon write has materialized the output. */
-  private final case class StagedAudit(frame: DataFrame, audit: DataFrame,
-    afterLand: () => Unit)
+    * frame and the AUDIT frame whose count joins the run's single
+    * folded stats action instead of paying its own job. The stage's
+    * state-slice write and its token-scale caches (grams / lines) ride
+    * the caller's scope: the write forks, the caches release when the
+    * batch front exits. */
+  private final case class StagedAudit(frame: DataFrame, audit: DataFrame)
 
   /** Shared span-state stage: clean `deconRaw` against history+batch
     * gram counts, land this batch's counts slice, return the cleaned
@@ -390,13 +372,15 @@ object CurationRun {
     * batch's gram keys hit (VERDICT r09 item 1); the slice itself
     * lands bucketed by gram hash for the next increment's pruned
     * read. */
-  private def spanStateStage(deconRaw: DataFrame,
+  private def spanStateStage(s: DriverOverlap.Scope, deconRaw: DataFrame,
       historyOf: DataFrame => DataFrame,
       stateOutDir: String, spanK: Int,
       spanMinDf: Int): StagedAudit = {
     val raw = deconRaw.persist() // grams + removal base + quality join
+    s.release(raw.unpersist())
     val (cleaned, slice, gramsRel) = TextDedup.removeRepeatedSpansIncrementalBy(
       raw, "doc_id", "text", spanK, spanMinDf, historyOf)
+    s.release(gramsRel())
     // localCheckpoint, not persist: this compact output is the leaf the
     // decon write AND the deferred audit count both hang off — under
     // plain persist each of those actions re-analyzes (and the SQL
@@ -407,22 +391,16 @@ object CurationRun {
     // The checkpoint runs FIRST (it materializes the shared raw/gram
     // caches), then the batch's state-slice write — independent of
     // everything until the caches release — lands on a driver thread
-    // (guide §2.6) overlapping the downstream stages; afterLand joins
+    // (guide §2.6) overlapping the downstream stages; the scope joins
     // it before the release.
     val withQ = cleaned
       .join(raw.select(col("doc_id"), col("quality_score")), "doc_id")
       .select(col("doc_id"), col("clean_text").as("text"),
         col("quality_score"), col("n_removed"))
       .localCheckpoint(true)
-    val joinSlice = DriverOverlap.launchValue(() =>
-      StateLayout.writeBucketed(slice, s"$stateOutDir/span_grams_batch", "h"))
-    StagedAudit(withQ.drop("n_removed"), withQ.where(col("n_removed") > 0),
-      () => try joinSlice() finally { gramsRel(); raw.unpersist() })
+    s.fork(StateLayout.writeBucketed(slice, s"$stateOutDir/span_grams_batch", "h"))
+    StagedAudit(withQ.drop("n_removed"), withQ.where(col("n_removed") > 0))
   }
-
-  private def spanStateActive(stateInDir: String): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$stateInDir/span_grams_batch"))
 
   /** Shared line-state stage ([[spanStateStage]]'s discipline at line
     * granularity, q144/q145): clean the RAW batch against
@@ -434,31 +412,27 @@ object CurationRun {
     * operational order (RefinedWeb dedups extracted lines, then
     * normalizes). Line df is therefore always counted on RAW batch
     * text, which keeps the composed-df equality exact across weeks. */
-  private def lineStateStage(rawDocs: DataFrame,
+  private def lineStateStage(s: DriverOverlap.Scope, rawDocs: DataFrame,
       historyOf: DataFrame => DataFrame,
       stateOutDir: String, lineMinDf: Int): StagedAudit = {
     val raw = rawDocs.select(col("doc_id"), col("text")).persist()
+    s.release(raw.unpersist())
     val (cleaned, slice, linesRel) = TextDedup.removeRepeatedLinesIncrementalBy(
       raw, "doc_id", "text", lineMinDf, historyOf)
+    s.release(linesRel())
     // localCheckpoint: same lineage-truncation rationale as
     // [[spanStateStage]] — the line chain feeds prepBatch AND the
     // deferred audit count, so a plain persist re-renders the whole
     // raw-line chain per downstream action. Checkpoint first (it
     // materializes the shared line cache), then the slice write lands
     // on a driver thread overlapping the downstream stages, joined by
-    // afterLand before the cache releases (see [[spanStateStage]]).
+    // the scope before the cache releases (see [[spanStateStage]]).
     val out = cleaned
       .select(col("doc_id"), col("clean_text").as("text"), col("n_removed"))
       .localCheckpoint(true)
-    val joinSlice = DriverOverlap.launchValue(() =>
-      StateLayout.writeBucketed(slice, s"$stateOutDir/line_df_batch", "h"))
-    StagedAudit(out.drop("n_removed"), out.where(col("n_removed") > 0),
-      () => try joinSlice() finally { linesRel(); raw.unpersist() })
+    s.fork(StateLayout.writeBucketed(slice, s"$stateOutDir/line_df_batch", "h"))
+    StagedAudit(out.drop("n_removed"), out.where(col("n_removed") > 0))
   }
-
-  private def lineStateActive(stateInDir: String): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$stateInDir/line_df_batch"))
 
   private def emptyGramCounts(spark: org.apache.spark.sql.SparkSession): DataFrame =
     spark.range(0).select(col("id").as("h"), col("id").as("n_docs"))
@@ -480,12 +454,12 @@ object CurationRun {
     * outside any cluster pass through. Returns the filtered frame
     * (PERSISTED — the output tail runs several actions over it, and
     * unpersisted the label-join chain re-executed per action; ADVICE
-    * r07) and the release hook the caller fires after the output tail
-    * + folded stats action. The dropped count is NOT paid here: the
+    * r07), released when scope `s` exits — after the output tail and
+    * the folded stats action. The dropped count is NOT paid here: the
     * run's single folded stats action counts kept and out and takes
     * the difference (VERDICT r09 item 3). */
-  private def semanticKeepFilter(kept: DataFrame,
-      semLabels: DataFrame): (DataFrame, () => Unit) = {
+  private def semanticKeepFilter(s: DriverOverlap.Scope, kept: DataFrame,
+      semLabels: DataFrame): DataFrame = {
     val labeled = kept.join(
       semLabels.select(col("doc_id"), col("canonical_id")),
       Seq("doc_id"), "left")
@@ -495,7 +469,8 @@ object CurationRun {
       .where(col("canonical_id").isNull || col("doc_id") === col("surv_id"))
       .select(col("doc_id"), col("text"), col("quality_score"))
       .persist()
-    (out, () => { out.unpersist(); () })
+    s.release(out.unpersist())
+    out
   }
 
   /** Survivor keep set over the decontaminated corpus: near-dup
@@ -567,8 +542,7 @@ object CurationRun {
     * consolidates them into the bucketed layout). */
   private def composedBands(spark: org.apache.spark.sql.SparkSession,
       lineage: Seq[String], pruneTo: Option[DataFrame]): DataFrame = {
-    val (withBands, legacy) = lineage.partition(d =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/bands_batch")))
+    val (withBands, legacy) = lineage.partition(hasState(_, "bands_batch"))
     val parts =
       (if (withBands.isEmpty) Nil
        else Seq(pruneTo match {
@@ -683,67 +657,65 @@ object CurationRun {
   }
 
   /** The init-side semantic/ANN TRAINER block, extracted from
-    * [[runInit]] so it can run as an overlapped branch (r14): the
+    * [[runInit]] so it can run as a fork of its state block (r14): the
     * frozen quantizer (trained or supplied), its salt, the init
     * batch's cells + fit summary, the full semantic label table, and
     * (opt-in) the frozen ANN model + init codes — all off one compact
     * persisted (id, vector) cache. Depends only on the landed decon
     * slice and the embeddings frame; consumers of `sem_clusters` run
-    * after the branch joins. */
+    * after the fork joins. */
   private def semInitTrainWrites(spark: org.apache.spark.sql.SparkSession,
       stateOutDir: String, deconS: DataFrame, emb: DataFrame,
       semClusters: Int, semIters: Int, semThreshold: Double,
       semCentroidsIn: Option[String], semSalt: Int,
       annState: Boolean, annSubspaces: Int, annCodewords: Int,
-      annClusters: Int, annIters: Int): Unit = {
+      annClusters: Int, annIters: Int): Unit = DriverOverlap.scope { s =>
     // Persisted: the quantizer trainer's init sample + per-iter
     // assignment passes, the cell/fit writes, and (when on) the
     // ANN model/codes trainers all re-scan this join — one compact
     // (id, vector) cache serves ~20 trainer actions instead of
     // re-paying the decon-join per pass (VERDICT r09 item 3).
     val vecs = embeddedVecs(deconS, emb).persist()
-    try {
-      // Frozen quantizer: trained on the init corpus (or supplied,
-      // e.g. by a seeded scratch replay / a rebase); becomes state.
-      val cen = semCentroidsIn match {
-        case Some(p) => readSemCentroids(spark, p)
-        case None => VectorSim.kmeansCentroids(vecs, semClusters, semIters)
-      }
-      writeSemCentroids(spark, stateOutDir, cen)
-      // The salt is part of the frozen quantizer contract — record
-      // it in state so incrementals can't drift from init's value.
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$stateOutDir/sem_salt.txt"),
-        s"$semSalt\n")
-      def semWrites(): Unit = {
-        StateLayout.writeBucketed(VectorSim.semanticCells(vecs, cen, semSalt),
-          s"$stateOutDir/sem_cells_batch", "cell")
-        // Ingest-time fit summary (VERDICT r08 item 3): the batch's
-        // embeddings are in hand NOW — one extra tiny aggregate here
-        // makes every later drift decision O(#slices), not O(corpus).
-        StateLayout.writeState(VectorSim.quantizerFitSlice(vecs, cen),
-          s"$stateOutDir/sem_fit_batch", numFiles = 1)
-        val cellsS = StateLayout.readSlice(spark, s"$stateOutDir/sem_cells_batch")
-        StateLayout.writeState(
-          TextDedup.connectedComponents(VectorSim.semanticPairsIncremental(
-            cellsS, emb, cellsS.select(col("vec_id")), semThreshold)),
-          s"$stateOutDir/sem_clusters", numFiles = 1)
-      }
-      // ANN index state (VERDICT r07 item 3): train the frozen model
-      // on the same cached embedded decon vectors. The two write
-      // families share ONLY the vecs cache, so when the quantizer was
-      // trained here (training fully materialized vecs) the ANN
-      // trainer runs as an overlapped branch (guide §2.6); under
-      // supplied centroids the cache is still cold and concurrent
-      // first-materialization would duplicate its compute — sequential.
-      def annWrites(): Unit =
-        if (annState)
-          writeAnnInit(spark, stateOutDir, vecs,
-            annSubspaces, annCodewords, annClusters, annIters)
-      if (semCentroidsIn.isEmpty)
-        DriverOverlap.overlapped(Seq(() => annWrites()))(semWrites())
-      else { semWrites(); annWrites() }
-    } finally vecs.unpersist()
+    s.release(vecs.unpersist())
+    // Frozen quantizer: trained on the init corpus (or supplied,
+    // e.g. by a seeded scratch replay / a rebase); becomes state.
+    val cen = semCentroidsIn match {
+      case Some(p) => readSemCentroids(spark, p)
+      case None => VectorSim.kmeansCentroids(vecs, semClusters, semIters)
+    }
+    writeSemCentroids(spark, stateOutDir, cen)
+    // The salt is part of the frozen quantizer contract — record
+    // it in state so incrementals can't drift from init's value.
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$stateOutDir/sem_salt.txt"),
+      s"$semSalt\n")
+    def semWrites(): Unit = {
+      StateLayout.writeBucketed(VectorSim.semanticCells(vecs, cen, semSalt),
+        s"$stateOutDir/sem_cells_batch", "cell")
+      // Ingest-time fit summary (VERDICT r08 item 3): the batch's
+      // embeddings are in hand NOW — one extra tiny aggregate here
+      // makes every later drift decision O(#slices), not O(corpus).
+      StateLayout.writeState(VectorSim.quantizerFitSlice(vecs, cen),
+        s"$stateOutDir/sem_fit_batch", numFiles = 1)
+      val cellsS = StateLayout.readSlice(spark, s"$stateOutDir/sem_cells_batch")
+      StateLayout.writeState(
+        TextDedup.connectedComponents(VectorSim.semanticPairsIncremental(
+          cellsS, emb, cellsS.select(col("vec_id")), semThreshold)),
+        s"$stateOutDir/sem_clusters", numFiles = 1)
+    }
+    // ANN index state (VERDICT r07 item 3): train the frozen model
+    // on the same cached embedded decon vectors. The two write
+    // families share ONLY the vecs cache, so when the quantizer was
+    // trained here (training fully materialized vecs) the ANN
+    // trainer forks (guide §2.6); under supplied centroids the cache
+    // is still cold and concurrent first-materialization would
+    // duplicate its compute — sequential.
+    def annWrites(): Unit =
+      if (annState)
+        writeAnnInit(spark, stateOutDir, vecs,
+          annSubspaces, annCodewords, annClusters, annIters)
+    if (semCentroidsIn.isEmpty) { s.fork(annWrites()); semWrites() }
+    else { semWrites(); annWrites() }
   }
 
   /** Survivor keep set from explicit decon + clusters frames (the
@@ -766,16 +738,20 @@ object CurationRun {
   /** The landed batch front both cadences share: the line-df stage (on
     * RAW text, see [[lineStateStage]]), [[prepBatch]], the optional
     * exact-recrawl gate, the span-df stage, the bucketed `decon_batch`
-    * slice write, the stages' token-scale releases, and the slice's
-    * read-back. `history` is the lineage the df counts and the gate
-    * read — empty at init, which cleans against the batch's own
-    * counts (the from-scratch df). */
+    * slice write, and the slice's read-back. One scope holds the
+    * stages' slice-write forks and their token-scale caches: the decon
+    * write materialized both stages' compact outputs, so on its exit
+    * the forks join and the caches release — on every path — while the
+    * audit frames stay for the run's one folded stats action.
+    * `history` is the lineage the df counts and the gate read — empty
+    * at init, which cleans against the batch's own counts (the
+    * from-scratch df). */
   private def batchFront(docs: DataFrame, benchmark: DataFrame,
       stateOutDir: String, history: Seq[String], lineOn: Boolean,
       spanOn: Boolean, exactGate: Boolean, minQuality: Double,
       minContaminatedShingles: Int, classifier: Option[(DataFrame, Int)],
       minClassifierScore: Double, spanK: Int, spanMinDf: Int,
-      lineMinDf: Int): BatchFront = {
+      lineMinDf: Int): BatchFront = DriverOverlap.scope { s =>
     val spark = docs.sparkSession
     // History df counts READ PRUNED to the buckets the batch's keys hit
     // (VERDICT r09 item 1) — state IO per increment tracks the batch
@@ -785,7 +761,7 @@ object CurationRun {
       else bc => StateLayout.readSlicesPruned(spark, history, name, "h",
         bc.select(col("h")))
     val lineStaged =
-      if (lineOn) Some(lineStateStage(docs, historyOf("line_df_batch"),
+      if (lineOn) Some(lineStateStage(s, docs, historyOf("line_df_batch"),
         stateOutDir, lineMinDf))
       else None
     val deconNew = prepBatch(lineStaged.map(_.frame).getOrElse(docs),
@@ -814,32 +790,25 @@ object CurationRun {
         val hashedBatch = deconNew
           .withColumn("content_hash", TextDedup.contentHash(col("text")))
           .persist()
+        s.release(hashedBatch.unpersist())
         val histKeys = StateLayout.readSlicesPruned(spark, history,
           "hash_batch", "content_hash", hashedBatch.select(col("content_hash")))
           .select(col("content_hash")).distinct().persist()
-        val nHist = histKeys.count()
-        val novel = TextDedup.bloomGatedNewByKeys(histKeys, hashedBatch,
-          "content_hash", nHist)
+        s.release(histKeys.unpersist())
+        TextDedup.bloomGatedNewByKeys(histKeys, hashedBatch,
+          "content_hash", histKeys.count())
           .drop("content_hash")
-        CacheLease.releaseAfterAction(novel) { () =>
-          histKeys.unpersist(); hashedBatch.unpersist(); ()
-        }
       }
     val spanStaged =
-      if (spanOn) Some(spanStateStage(deconRouted, historyOf("span_grams_batch"),
+      if (spanOn) Some(spanStateStage(s, deconRouted, historyOf("span_grams_batch"),
         stateOutDir, spanK, spanMinDf))
       else None
+    publishTailProbe("batch-front")
     // Bucketed by doc_id (VERDICT r10 item 1): the delta publisher's
     // rare re-surfacing-doc lookup reads decon text PRUNED to those
     // ids' buckets instead of scanning the composed corpus.
     StateLayout.writeBucketed(spanStaged.map(_.frame).getOrElse(deconRouted),
       s"$stateOutDir/decon_batch", "doc_id", buckets = 8)
-    // The decon write materialized both stages' compact outputs; their
-    // token-scale intermediates (lines/grams) release NOW — every hook
-    // runs even when another's slice write failed — while the audit
-    // frames stay for the run's one folded stats action.
-    DriverOverlap.runAll(spanStaged.map(_.afterLand).toSeq ++
-      lineStaged.map(_.afterLand))
     BatchFront(StateLayout.readSlice(spark, s"$stateOutDir/decon_batch"),
       spanStaged, lineStaged)
   }
@@ -886,38 +855,37 @@ object CurationRun {
       embeddings: Option[DataFrame], semClusters: Int, semIters: Int,
       semThreshold: Double, semMaxCellSize: Int, cfg: PublishState.Config,
       stateOutDir: String, outDir: String, v: Long,
-      carrier: PublishCarrier): Stats = {
+      carrier: PublishCarrier): Stats = DriverOverlap.scope { s =>
     val spark = decon.sparkSession
     def semLabels = StateLayout.readState(spark, s"$stateOutDir/sem_clusters")
+    // Stage caches release on the scope's exit, after the folded
+    // action read them.
     val kept = keepFromClusters(decon, clustersS).persist()
-    val (semFinal, semDroppedEager, semRelease) =
-      if (semStateOn) {
-        val (out, rel) = semanticKeepFilter(kept, semLabels)
-        (out, -1L, rel)
-      } else semanticStage(kept, embeddings,
+    s.release(kept.unpersist())
+    val (semFinal, semDroppedEager) =
+      if (semStateOn) (semanticKeepFilter(s, kept, semLabels), -1L)
+      else semanticStage(s, kept, embeddings,
         semClusters, semIters, semThreshold, semMaxCellSize)
     val publishStateOn = embeddings.isEmpty || semStateOn
-    // The publish-state branch and the output sinks both read the
+    // The publish-state fork and the output sinks both read the
     // persisted kept/semFinal caches: materialize them FIRST (the
     // DriverOverlap caller rule), or the two race to first-materialize
     // them and the run's job count varies. The count is the audit's
     // semFinal count (semFinal IS kept without embeddings).
     val nSemFinal = if (publishStateOn) semFinal.count() else -1L
-    val (landedCurated, landedBins) = DriverOverlap.overlapped(Seq(
-      () => if (publishStateOn)
-        writePublishState(spark, decon, kept, semFinal,
-          if (semStateOn) Some(semLabels) else None,
-          cfg, stateOutDir, outDir, v, carrier)
-    ))(landOutputs(semFinal, outDir, cfg, carrier))
+    val publishState = s.fork(if (publishStateOn)
+      writePublishState(spark, decon, kept, semFinal,
+        if (semStateOn) Some(semLabels) else None,
+        cfg, stateOutDir, outDir, v, carrier))
+    val (landedCurated, landedBins) = landOutputs(semFinal, outDir, cfg, carrier)
+    publishState()
     // Completion marker LAST — after every publish artifact AND the
     // publish state (VERDICT r12 item 2).
     PublishState.markComplete(outDir, carrier)
-    // Stage caches release only after the folded action read them.
     val c = foldCounts(Seq(
       "input" -> input, "decon" -> decon, "kept" -> kept,
       "sampled" -> landedCurated, "bins" -> landedBins) ++
       front.audits)
-    semRelease(); kept.unpersist()
     Stats(input = c("input"), gated = -1L, modelGated = -1L,
       decontaminated = c("decon"),
       spanCleaned = front.span.fold(-1L)(_ => c("span")),
@@ -968,36 +936,34 @@ object CurationRun {
     // always: the flag's whole point is the checkable contract, and
     // increments then validate every batch bucket-pruned in O(batch).
     val doSemState = semanticState && embeddings.isDefined
-    // Independent state groups OVERLAPPED on driver threads (guide
-    // §2.6, r14): the retrieval states, the compact hash slice, and
-    // the semantic/ANN trainer block all hang only off the landed
-    // decon slice, while the main thread runs the near-dup chain
-    // (index -> signatures -> bands -> pairs -> labels). Every branch
-    // writes its own artifact dir; the one cross-branch consumer
-    // (sem_clusters -> semanticKeepFilter) runs after the join.
-    val clustersS = DriverOverlap.overlapped(Seq(
-      () => if (retrievalState) {
+    // Independent state groups FORKED on driver threads (guide §2.6,
+    // r14): the retrieval states, the compact hash slice, and the
+    // semantic/ANN trainer block all hang only off the landed decon
+    // slice, while the main thread runs the near-dup chain (index ->
+    // signatures -> bands -> pairs -> labels). Every fork writes its
+    // own artifact dir; the one cross-fork consumer (sem_clusters ->
+    // semanticKeepFilter) runs after the scope joins them.
+    val clustersS = DriverOverlap.scope { s =>
+      if (retrievalState) s.fork {
         val rdocs = deconS.select(col("doc_id"), col("text"))
         Bm25State.writeInit(rdocs, "doc_id", "text", s"$stateOutDir/bm25",
           recordIds = true)
         LmState.writeInit(rdocs, "text", s"$stateOutDir/lm",
           recordIds = true)
-      },
-      () => StateLayout.writeBucketed(
+      }
+      s.fork(StateLayout.writeBucketed(
         deconS.select(col("doc_id"),
           TextDedup.contentHash(col("text")).as("content_hash")),
-        s"$stateOutDir/hash_batch", "content_hash"),
-      () =>
-        if (doSemState)
-          semInitTrainWrites(spark, stateOutDir,
-            deconS, embeddings.get, semClusters, semIters, semThreshold,
-            semCentroidsIn, semSalt, annState, annSubspaces, annCodewords,
-            annClusters, annIters)
-        else if (annState && embeddings.isDefined)
-          writeAnnInit(spark, stateOutDir,
-            embeddedVecs(deconS, embeddings.get),
-            annSubspaces, annCodewords, annClusters, annIters)
-    )) {
+        s"$stateOutDir/hash_batch", "content_hash"))
+      if (doSemState) s.fork(
+        semInitTrainWrites(spark, stateOutDir,
+          deconS, embeddings.get, semClusters, semIters, semThreshold,
+          semCentroidsIn, semSalt, annState, annSubspaces, annCodewords,
+          annClusters, annIters))
+      else if (annState && embeddings.isDefined) s.fork(
+        writeAnnInit(spark, stateOutDir,
+          embeddedVecs(deconS, embeddings.get),
+          annSubspaces, annCodewords, annClusters, annIters))
       val (idxS, sigS) = writeNearDupSlices(deconS, stateOutDir, sigFiles = 4)
       val clusters = TextDedup.connectedComponents(
         TextDedup.minhashLshPairs(idxS, sigS, dedupThreshold, NumHashes, Bands))
@@ -1049,33 +1015,31 @@ object CurationRun {
     // readers compose them along the lineage. Line/span df state is
     // auto-detected like the semantic/ANN state.
     val front = batchFront(newDocs, benchmark, stateOutDir, lineage,
-      lineStateActive(stateInDir), spanStateActive(stateInDir), exactGate,
-      minQuality, minContaminatedShingles, classifier, minClassifierScore,
+      hasState(stateInDir, "line_df_batch"),
+      hasState(stateInDir, "span_grams_batch"), exactGate, minQuality,
+      minContaminatedShingles, classifier, minClassifierScore,
       spanK, spanMinDf, lineMinDf)
     val deconNewS = front.decon
     // Retrieval-state increments (auto-detected — the state, not a
-    // flag, decides, like the semantic cadence) run as two branches of
-    // the overlapped state block below, off the landed decon slice.
+    // flag, decides, like the semantic cadence) run as two forks of
+    // the state block below, off the landed decon slice.
     // validateDisjoint + recordIds always on: the O(batch)
     // bucket-pruned probe is the reason the family is in the cadence.
     // A replayed batch refuses when the block joins — after the
     // near-dup chain, still BEFORE writeLineage — so stateOutDir is
     // left without its lineage manifest (not a readable state version).
-    val retrievalOn = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$stateInDir/bm25"))
+    val retrievalOn = hasState(stateInDir, "bm25")
     def rdocs = deconNewS.select(col("doc_id"), col("text"))
     // Semantic STATE writes (frozen-quantizer cadence, auto-detected —
     // the state, not a flag, decides): batch cells + fit summary +
     // merged labels land regardless of which publish tail runs below.
-    val semStateActive = embeddings.isDefined && java.nio.file.Files
-      .exists(java.nio.file.Paths.get(s"$stateInDir/sem_centroids"))
+    val semStateActive = embeddings.isDefined && hasState(stateInDir, "sem_centroids")
     // Publish-tail decision + base rows hoisted ABOVE the near-dup
     // chain (guide §2.6): the delta decision reads only prior-state
     // files, and the batch's ledger base rows (lang-id + token counts
     // over the LANDED decon slice) depend on nothing this run still
-    // computes — so the base-row checkpoint materializes on a driver
-    // thread while the main thread runs the near-dup chain; the tail
-    // joins it where it previously computed the frame inline.
+    // computes — so the base-row checkpoint materializes as a fork of
+    // the state block while the main thread runs the near-dup chain.
     val cfg = PublishState.Config(fractions, defaultFraction,
       packBudget, publishSpan)
     // Try: a torn/truncated meta file (a crash mid-write on a store
@@ -1099,43 +1063,43 @@ object CurationRun {
           // re-publish, which rebuilds totals alongside the ledger.
           PublishState.totalsActive(stateInDir, carrier)
       }.getOrElse(false)
-    val batchBaseJoin: Option[() => DataFrame] =
-      if (!deltaOk) None
-      else Some(DriverOverlap.launchValue(() =>
-        // localCheckpoint, not persist — see deltaPublishTail's note
-        // on `batchBase` for the lineage-truncation rationale.
-        PublishState.baseRows(
-          deconNewS.select(col("doc_id"), col("text"), col("quality_score")),
-          cfg).localCheckpoint(true)))
-    // Independent state groups OVERLAPPED on driver threads (guide
-    // §2.6, r14 — same shape as runInit): the retrieval states, the
-    // compact hash slice, the semantic-state writes, and the
-    // ANN-codes append all hang only off the landed decon slice +
+    // Independent state groups FORKED on driver threads (guide §2.6,
+    // r14 — same shape as runInit): the base rows, the retrieval
+    // states, the compact hash slice, the semantic-state writes, and
+    // the ANN-codes append all hang only off the landed decon slice +
     // prior state, while the main thread runs the near-dup chain. The
-    // one cross-branch consumer (sem_clusters -> the publish tail)
-    // runs after the join.
-    val clustersS = DriverOverlap.overlapped(Seq(
-      () => if (retrievalOn)
-        Bm25State.writeIncrement(rdocs, "doc_id", "text",
+    // one cross-fork consumer (sem_clusters -> the publish tail) runs
+    // after the scope joins them.
+    val (clustersS, batchBase) = DriverOverlap.scope { s =>
+      val batchBase =
+        if (!deltaOk) None
+        else Some(s.fork(
+          // localCheckpoint, not persist — see deltaPublishTail's note
+          // on `batchBase` for the lineage-truncation rationale.
+          PublishState.baseRows(
+            deconNewS.select(col("doc_id"), col("text"), col("quality_score")),
+            cfg).localCheckpoint(true)))
+      if (retrievalOn) {
+        s.fork(Bm25State.writeIncrement(rdocs, "doc_id", "text",
           s"$stateInDir/bm25", s"$stateOutDir/bm25",
-          validateDisjoint = true, recordIds = true),
-      () => if (retrievalOn)
-        LmState.writeIncrement(rdocs, "text",
+          validateDisjoint = true, recordIds = true))
+        s.fork(LmState.writeIncrement(rdocs, "text",
           s"$stateInDir/lm", s"$stateOutDir/lm",
-          validateDisjoint = true, recordIds = true),
-      () => StateLayout.writeBucketed(
+          validateDisjoint = true, recordIds = true))
+      }
+      s.fork(StateLayout.writeBucketed(
         deconNewS.select(col("doc_id"),
           TextDedup.contentHash(col("text")).as("content_hash")),
-        s"$stateOutDir/hash_batch", "content_hash"),
-      () => if (semStateActive)
+        s"$stateOutDir/hash_batch", "content_hash"))
+      if (semStateActive) s.fork(
         semStateIncrementWrites(spark, stateInDir, stateOutDir, lineage,
-          deconNewS, embeddings.get, semThreshold),
+          deconNewS, embeddings.get, semThreshold))
       // ANN-codes append (VERDICT r07 item 3, auto-detected like the
       // semantic state): encode ONLY this batch under the frozen model.
-      () => if (embeddings.isDefined && annStateActive(stateInDir))
+      if (embeddings.isDefined && hasState(stateInDir, "ann_model")) s.fork(
         writeAnnIncrement(spark, stateInDir,
-          stateOutDir, embeddedVecs(deconNewS, embeddings.get))
-    )) {
+          stateOutDir, embeddedVecs(deconNewS, embeddings.get)))
+      publishTailProbe("state-block")
       val (idxNewS, _) = writeNearDupSlices(deconNewS, stateOutDir, sigFiles = 2)
       val bandsNewS = StateLayout.readSlice(spark, s"$stateOutDir/bands_batch")
       // Pruned-state pairs (VERDICT r09 item 1 extended to the dedup
@@ -1156,17 +1120,15 @@ object CurationRun {
         probe => StateLayout.readSlicesPruned(spark, lineage,
           "index_batch", "doc_id", probe),
         dedupThreshold)
-      // finally, not a lease: CC incremental consumes the pairs through
-      // untracked toRdd bookkeeping a listener lease never sees (see the
-      // operator's scaladoc); after its contraction materializes,
-      // nothing re-reads the pairs, so releasing here is both safe and
-      // exception-tight.
-      try {
-        val clusters =
-          TextDedup.connectedComponentsIncremental(clustersOld, newPairs)
-        StateLayout.writeState(clusters, s"$stateOutDir/clusters", numFiles = 1)
-        StateLayout.readState(spark, s"$stateOutDir/clusters")
-      } finally pairsRel()
+      // A scope release, not a lease: CC incremental consumes the pairs
+      // through untracked toRdd bookkeeping a listener lease never sees
+      // (see the operator's scaladoc); after its contraction
+      // materializes, nothing re-reads the pairs.
+      s.release(pairsRel())
+      val clusters =
+        TextDedup.connectedComponentsIncremental(clustersOld, newPairs)
+      StateLayout.writeState(clusters, s"$stateOutDir/clusters", numFiles = 1)
+      (StateLayout.readState(spark, s"$stateOutDir/clusters"), batchBase)
     }
     StateLayout.writeLineage(stateOutDir, lineage :+ stateOutDir)
 
@@ -1174,17 +1136,11 @@ object CurationRun {
     // publish artifacts under the SAME config and the membership flags
     // are incrementally derivable (`deltaOk` above); otherwise the full
     // re-publish, which (re)builds the publish state for next week.
-    batchBaseJoin match {
-      case Some(joinBaseRows) =>
-        // Every job the delta tail schedules carries this tag (UI
-        // debugging; MemPressureStress splits its spill accounting on
-        // it). Tags add to the caller's own, so nothing is clobbered.
-        val sc = spark.sparkContext
-        sc.addJobTag(DeltaPublishJobTag)
-        try deltaPublishTail(spark, newDocs, deconNewS, joinBaseRows(),
+    batchBase match {
+      case Some(base) =>
+        deltaPublishTail(spark, newDocs, deconNewS, base(),
           clustersS, cfg, stateInDir, stateOutDir, lineage, outDir,
           semStateActive, front, carrier)
-        finally sc.removeJobTag(DeltaPublishJobTag)
       case None =>
         fullPublishTail(newDocs, deconOld.unionByName(deconNewS), clustersS,
           front, semStateActive, embeddings, semClusters, semIters,
@@ -1239,12 +1195,15 @@ object CurationRun {
       s"$stateOutDir/sem_clusters", numFiles = 1)
   }
 
-  /** Test seam for the crash-atomicity spec (VERDICT r12 item 2):
-    * invoked with a phase label at injection points inside the delta
-    * publish tail; a spec swaps in a thrower to kill the tail between
-    * the carry phase and the manifest write, then pins that readers
-    * refuse the partial publish and a re-run converges bit-equal.
-    * No-op in production. */
+  /** Test seam for the crash specs (VERDICT r12 item 2): invoked with
+    * a phase label at injection points while driver-thread forks run —
+    * "batch-front" (span/line slice writes in flight), "state-block"
+    * (the increment's state forks and base-row fork in flight),
+    * "after-carry" and "before-manifest" (inside the delta publish
+    * tail). A spec swaps in a thrower to kill the run there, then pins
+    * that no fork or cache outlives the call, readers refuse the
+    * partial publish, and a re-run converges bit-equal. No-op in
+    * production. */
   private[graft] var publishTailProbe: String => Unit = _ => ()
 
   /** DELTA weekly publish (VERDICT r10 item 1; metadata made
@@ -1275,16 +1234,22 @@ object CurationRun {
       clustersS: DataFrame,
       cfg: PublishState.Config, stateInDir: String, stateOutDir: String,
       lineageOld: Seq[String], outDir: String, semStateOn: Boolean,
-      front: BatchFront, carrier: PublishCarrier): Stats = {
+      front: BatchFront, carrier: PublishCarrier): Stats = DriverOverlap.scope { s =>
     import graft.functions.TextFunctions.tokens
+    // Every job the delta tail schedules carries this tag (UI
+    // debugging; MemPressureStress splits its spill accounting on it).
+    // Tags add to the caller's own, so nothing is clobbered.
+    val sc = spark.sparkContext
+    sc.addJobTag(DeltaPublishJobTag)
+    s.release(sc.removeJobTag(DeltaPublishJobTag))
     val (_, prevOut) = PublishState.readMeta(stateInDir, carrier)
     // `batchBase` arrives CHECKPOINTED (localCheckpoint, not persist):
     // the touched-doc frame and the flag recompute both read it, and
     // the checkpoint truncates its lineage, so neither re-runs nor
     // re-plans the language-id + token pass over the batch text.
     // Blocks release via ContextCleaner once the RDD is collected. The
-    // caller materializes it on a driver thread overlapping the
-    // near-dup chain (r14).
+    // caller materializes it on a fork overlapping the near-dup chain
+    // (r14).
     val semLabels =
       if (semStateOn) Some(StateLayout.readState(spark, s"$stateOutDir/sem_clusters"))
       else None
@@ -1292,6 +1257,8 @@ object CurationRun {
     // (doc_id, dedup canonical_id, semantic canonical_id): the prune
     // key of the standing-ledger read and the driving side of the
     // recompute's single join with the standing and batch rows.
+    // `batchBase`, `touched` and `updated` are localCheckpoint blocks,
+    // not cache entries — they release via ContextCleaner on GC.
     val touched = touchedDocs(batchBase, clustersS, semLabels)
       .localCheckpoint(true)
     val prevStanding = PublishState.composeLedgerPruned(spark, lineageOld,
@@ -1329,6 +1296,7 @@ object CurationRun {
         sum(col("dkept")).as("dkept"), sum(col("dsem")).as("dsem"),
         sum(col("dent_old")).as("dent_old"))
       .persist()
+    s.release(evAgg.unpersist())
     val evRows = evAgg.collect()
     val changed = evRows.filter(_.getAs[Long]("nev") > 0)
       .map(_.getAs[Long]("shard")).toSeq.sorted
@@ -1340,23 +1308,21 @@ object CurationRun {
 
     // Next week's state rows and this run's audit fold read only
     // materialized frames (`updated`, `evAgg`, the front's audit
-    // frames), never outDir: they run as branches of the curated ->
-    // packed -> manifest chain below (guide §2.6) and join before the
-    // meta and the completion marker — also when the chain fails, so
-    // no writer outlives this call. The correction slice lands at this
-    // lineage position; the fingerprint DELTA slice only (VERDICT r12
-    // item 4): the weekly path neither reads nor rewrites the composed
-    // table — readers compose the newest full table (init/rebase) with
-    // the delta slices, pinned equal to the from-scratch recompute at
-    // every version. The evAgg rows already ARE the deltas. `c` is
-    // set on its branch thread and read only after the join.
-    var c = Map.empty[String, Long]
-    val bins = DriverOverlap.overlapped(Seq(
-      () => PublishState.writeLedgerSlice(updated, stateOutDir,
-        v = lineageOld.size),
-      () => PublishState.writeFingerprintDelta(evAgg, stateOutDir),
-      () => c = foldCounts(Seq("input" -> newDocs) ++ front.audits)
-    )) {
+    // frames), never outDir: they fork beside the curated -> packed ->
+    // manifest chain below (guide §2.6) and join before the meta and
+    // the completion marker — the scope joins them when the chain
+    // fails, so no writer outlives this call. The correction slice
+    // lands at this lineage position; the fingerprint DELTA slice only
+    // (VERDICT r12 item 4): the weekly path neither reads nor rewrites
+    // the composed table — readers compose the newest full table
+    // (init/rebase) with the delta slices, pinned equal to the
+    // from-scratch recompute at every version. The evAgg rows already
+    // ARE the deltas.
+    val ledger = s.fork(PublishState.writeLedgerSlice(updated, stateOutDir,
+      v = lineageOld.size))
+    val fpDelta = s.fork(PublishState.writeFingerprintDelta(evAgg, stateOutDir))
+    val counts = s.fork(foldCounts(Seq("input" -> newDocs) ++ front.audits))
+    val bins = {
       // Retract any STALE completion marker before the first mutation
       // of outDir (a crash-replay re-publishes into the same versioned
       // dir): from here until markComplete below, readers must refuse
@@ -1367,7 +1333,7 @@ object CurationRun {
       PublishState.prepareDir(s"$outDir/curated", carrier)
       PublishState.carryShardsExcept(s"$prevOut/curated", s"$outDir/curated",
         changedSet, carrier)
-      if (changed.nonEmpty) {
+      if (changed.nonEmpty) DriverOverlap.scope { cs =>
         val batchText = deconNewS.select(col("doc_id"), col("text"))
         val prevFiles =
           PublishState.shardFilesFor(s"$prevOut/curated", changedSet, carrier)
@@ -1392,6 +1358,7 @@ object CurationRun {
             .select(col("doc_id"), col("detected_lang"), col("quality_score"),
               cfg.shardOf(col("doc_id")).as("shard")))
           .persist()
+        cs.release(members.unpersist())
         // Re-surfacing docs (old, member again, absent from the previous
         // curated — a batch doc displaced their sem-cluster peer): text
         // via the doc-bucket-pruned decon read, never a corpus scan.
@@ -1408,6 +1375,7 @@ object CurationRun {
             .join(batchText.select(col("doc_id")), Seq("doc_id"), "left_anti")
             .join(prevCur.select(col("doc_id")), Seq("doc_id"), "left_anti")
             .persist())
+        enterIds.foreach(ids => cs.release(ids.unpersist()))
         val enterText = enterIds match {
           case None => batchText.where(lit(false))
           case Some(ids) => StateLayout.readSlicesPruned(spark, lineageOld,
@@ -1424,7 +1392,6 @@ object CurationRun {
             col("quality_score"), col("shard"))
         PublishState.writeSharded(curatedNew, s"$outDir/curated",
           keepShardInContent = false, clear = false, carrier = carrier)
-        enterIds.foreach(_.unpersist()); members.unpersist()
       }
 
       // PACKED: carried shard files + re-pack of exactly the changed
@@ -1495,6 +1462,8 @@ object CurationRun {
 
     // Next week's state, after the joined slices: the composed totals
     // and the meta pointing at THIS publish.
+    ledger(); fpDelta()
+    val c = counts()
     PublishState.writeMeta(stateOutDir, cfg, outDir, carrier)
     val tPrev = PublishState.readTotals(stateInDir, carrier)
     def dsum(f: String): Long = evRows.map(_.getAs[Long](f)).sum
@@ -1537,11 +1506,8 @@ object CurationRun {
         "paying toward full-publish cost; see Stats.nShardsOverlap)")
 
     // Audit: the composed totals replace the corpus-frame counts
-    // one-for-one; input and front counts come from the folded branch,
-    // bins from the landed manifest. batchBase/touched/updated are
-    // localCheckpoint blocks, not cache entries — they release via
-    // ContextCleaner on GC.
-    evAgg.unpersist()
+    // one-for-one; input and front counts come from the folded fork,
+    // bins from the landed manifest.
     Stats(input = c("input"), gated = -1L, modelGated = -1L,
       decontaminated = totals.nDocs,
       spanCleaned = front.span.fold(-1L)(_ => c("span")),
@@ -1785,13 +1751,13 @@ object CurationRun {
     // Span-df state: slice counts ADD across disjoint-id batches, so
     // consolidation is one sum per gram hash — equivalent to the union
     // the readers sum at use time, in one compact slice.
-    if (spanStateActive(stateInDir))
+    if (hasState(stateInDir, "span_grams_batch"))
       StateLayout.writeBucketed(
         StateLayout.readSlices(spark, lineage, "span_grams_batch")
           .groupBy(col("h")).agg(sum(col("n_docs")).as("n_docs")),
         s"$stateOutDir/span_grams_batch", "h")
     // Line-df state consolidates the same way: slice counts add.
-    if (lineStateActive(stateInDir))
+    if (hasState(stateInDir, "line_df_batch"))
       StateLayout.writeBucketed(
         StateLayout.readSlices(spark, lineage, "line_df_batch")
           .groupBy(col("h")).agg(sum(col("n_docs")).as("n_docs")),
@@ -1801,14 +1767,13 @@ object CurationRun {
     // composed corpus — the codes are index artifacts, not labels, so
     // unlike the semantic quantizer there is no cross-batch label
     // state to re-derive and no retrain valve needed here).
-    if (annStateActive(stateInDir)) {
+    if (hasState(stateInDir, "ann_model")) {
       StateLayout.writeBucketed(StateLayout.readSlices(spark, lineage, "ann_codes_batch"),
         s"$stateOutDir/ann_codes_batch", "cell")
       StateLayout.writeState(StateLayout.readState(spark, s"$stateInDir/ann_model"),
         s"$stateOutDir/ann_model", numFiles = 1)
     }
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$stateInDir/sem_centroids"))) {
+    if (hasState(stateInDir, "sem_centroids")) {
       if (retrainSemantic) {
         val emb = embeddings.get
         val vecs = embeddedVecs(
@@ -1879,8 +1844,7 @@ object CurationRun {
     // (pure IO + exact re-sums) — without this, a post-rebase
     // increment would auto-detect no `bm25/` dir and silently drop
     // the retrieval cadence.
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$stateInDir/bm25"))) {
+    if (hasState(stateInDir, "bm25")) {
       Bm25State.rebase(spark, s"$stateInDir/bm25", s"$stateOutDir/bm25")
       LmState.rebase(spark, s"$stateInDir/lm", s"$stateOutDir/lm")
     }
@@ -1899,9 +1863,7 @@ object CurationRun {
       dirs: Seq[String], stateInDir: String,
       embeddings: Option[DataFrame]): DataFrame = {
     val cols = Seq(col("n_vectors"), col("sum_dist"), col("max_dist"))
-    val (withSummary, preSummary) = dirs.partition(d =>
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$d/sem_fit_batch")))
+    val (withSummary, preSummary) = dirs.partition(hasState(_, "sem_fit_batch"))
     // Hoisted: one centroid read/collect shared by every re-scored
     // slice (and skipped entirely when no slice needs it).
     lazy val cen = readSemCentroids(spark, s"$stateInDir/sem_centroids")
@@ -1948,9 +1910,7 @@ object CurationRun {
       stateInDir: String, driftRatio: Double = 1.5,
       embeddings: Option[DataFrame] = None): Boolean = {
     val lineage = StateLayout.readLineage(stateInDir)
-    val semActive = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$stateInDir/sem_centroids"))
-    semActive && lineage.size > 1 && {
+    hasState(stateInDir, "sem_centroids") && lineage.size > 1 && {
       def sideFit(dirs: Seq[String]): (Long, Double) = {
         val r = semFitFrames(spark, dirs, stateInDir, embeddings)
           .agg(coalesce(sum(col("n_vectors")), lit(0L)).as("n"),
@@ -2026,9 +1986,7 @@ object CurationRun {
       semMaxCellSize: Int = 1000,
       classifier: Option[(DataFrame, Int)] = None,
       minClassifierScore: Double = 0.5,
-      carrier: PublishCarrier = PublishCarrier.Posix): Stats = {
-    val spark = docs.sparkSession
-
+      carrier: PublishCarrier = PublishCarrier.Posix): Stats = DriverOverlap.scope { s =>
     // Map tier: canonicalize then strip PII/URLs.
     val normalized = TextAnalysis.normalize(docs, "doc_id", "text")
       .select(col("doc_id"), col("norm_text").as("text"))
@@ -2078,33 +2036,37 @@ object CurationRun {
     // Scoped span chain (VERDICT r07 item 7): the audit count below is
     // the first action over the result and materializes `spanned`'s
     // own persist, after which the gram cache is dead — release it
-    // synchronously instead of arming a lease the bench's rep boundary
-    // would race on the async listener bus.
-    val (spanRaw, spanRelease) = TextDedup
-      .removeRepeatedSpansScoped(decon, "doc_id", "text", k = spanK, minDf = spanMinDf)
-    // localCheckpoint (same rationale as `decon`): audit count + suite
-    // build + keep join + outputs all hang off this frame.
-    val spanned = spanRaw
-      .join(decon.select(col("doc_id"), col("quality_score")), "doc_id")
-      .select(col("doc_id"), col("clean_text").as("text"),
-        col("quality_score"), col("n_removed"))
-      .localCheckpoint(true)
-    val spanCleaned = spanned.where(col("n_removed") > 0).count()
-    spanRelease()
+    // synchronously (its own scope) instead of arming a lease the
+    // bench's rep boundary would race on the async listener bus.
+    val (spanned, spanCleaned) = DriverOverlap.scope { ss =>
+      val (spanRaw, spanRelease) = TextDedup
+        .removeRepeatedSpansScoped(decon, "doc_id", "text", k = spanK, minDf = spanMinDf)
+      ss.release(spanRelease())
+      // localCheckpoint (same rationale as `decon`): audit count + suite
+      // build + keep join + outputs all hang off this frame.
+      val spanned = spanRaw
+        .join(decon.select(col("doc_id"), col("quality_score")), "doc_id")
+        .select(col("doc_id"), col("clean_text").as("text"),
+          col("quality_score"), col("n_removed"))
+        .localCheckpoint(true)
+      (spanned, spanned.where(col("n_removed") > 0).count())
+    }
     val spanDocs = spanned.drop("n_removed")
 
     // Near-dup dedup over the span-cleaned corpus: shared artifacts,
     // quality-best survivor per cluster, unclustered docs keep
     // themselves. MinHash at a low threshold subsumes exact dups
     // (identical signatures collide in every band).
-    val suite = DedupSuite(spanDocs, "doc_id", "text", n = 3)
-    val (kept, keptCount) =
-      try keepSet(suite, spanDocs, dedupThreshold)
-      finally suite.close()
+    val (kept, keptCount) = DriverOverlap.scope { ss =>
+      val suite = DedupSuite(spanDocs, "doc_id", "text", n = 3)
+      ss.release(suite.close())
+      keepSet(suite, spanDocs, dedupThreshold)
+    }
+    s.release(kept.unpersist())
 
     // Embedding-space dedup over the near-dup survivors (paraphrase
     // duplicates shingles can't see).
-    val (semFinal, semDropped, semRelease) = semanticStage(kept, embeddings,
+    val (semFinal, semDropped) = semanticStage(s, kept, embeddings,
       semClusters, semIters, semThreshold, semMaxCellSize)
 
     // Deterministic language-stratified mix + the curated/packed/
@@ -2122,15 +2084,13 @@ object CurationRun {
       "input" -> docs, "gated" -> heurGated, "decon" -> decon,
       "sampled" -> landedCurated, "bins" -> landedBins) ++
       classifier.map(_ => "modelGated" -> gated))
-    val stats = Stats(
+    // decon/spanned are localCheckpoint blocks — released by
+    // ContextCleaner on GC, not by unpersist.
+    Stats(
       input = c("input"), gated = c("gated"),
       modelGated = c.getOrElse("modelGated", -1L),
       decontaminated = c("decon"), spanCleaned = spanCleaned,
       kept = keptCount, semDropped = semDropped,
       sampled = c("sampled"), bins = c("bins"))
-    // decon/spanned are localCheckpoint blocks — released by
-    // ContextCleaner on GC, not by unpersist.
-    semRelease(); kept.unpersist()
-    stats
   }
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextAnalysis
+import graft.operators.{DriverOverlap, TextAnalysis}
 
 /** Weekly-cadence n-gram LM count state (q150 — VERDICT r10 item 4):
   * the language-model twin of the BM25 retrieval index
@@ -88,18 +88,15 @@ object LmState {
     val m = TextAnalysis.lmTrain(docs, textCol, n)
     // The three slice writes are INDEPENDENT DAGs (each re-tokenizes
     // the batch — token-scale intermediates are deliberately uncached,
-    // the repo's array-caching lesson) — overlap them on driver
-    // threads (guide §2.6, r14): per-write job floors dominate these
-    // small bucketed writes at batch scale.
-    graft.operators.DriverOverlap.overlapped(Seq(
-      () => StateLayout.writeBucketed(m.bgCounts,
-        s"$stateOutDir/bg_counts_batch", "bg"),
-      () => if (recordIds)
-        StateLayout.writeBucketed(
-          docs.select(StateLayout.castIdStrict(col(idCol)).as("doc_id"))
-            .distinct(),
-          s"$stateOutDir/doc_ids_batch", "doc_id")
-    )) {
+    // the repo's array-caching lesson) — fork them (guide §2.6, r14):
+    // per-write job floors dominate these small bucketed writes at
+    // batch scale.
+    DriverOverlap.scope { s =>
+      s.fork(StateLayout.writeBucketed(m.bgCounts,
+        s"$stateOutDir/bg_counts_batch", "bg"))
+      if (recordIds) s.fork(StateLayout.writeBucketed(
+        docs.select(StateLayout.castIdStrict(col(idCol)).as("doc_id")).distinct(),
+        s"$stateOutDir/doc_ids_batch", "doc_id"))
       StateLayout.writeBucketed(m.prefixCounts,
         s"$stateOutDir/prefix_counts_batch", "w")
     }

@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import org.apache.spark.graft.SparkShims
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.operators.CacheLease
 
 /** Delta weekly publish (VERDICT r10 item 1): the increment that
   * re-publishes ONLY shards whose member set changed must be
@@ -375,50 +377,82 @@ class DeltaPublishSpec extends AnyFunSuite {
 
   test("a crash in the publish chain joins the tail's state branches: " +
       "no branch outlives the call, the ledger slice is whole or absent") {
-    // The ledger slice, the fingerprint delta and the audit fold run on
-    // driver threads beside the curated -> packed -> manifest chain; a
-    // failure in the chain must join them before it reaches the
-    // caller, so no writer is still landing files into stateOutDir.
+    // Every driver-thread fork of an increment — the span/line slice
+    // writes in the batch front, the state block's forks (retrieval,
+    // hash, semantic state) and its base-row fork, the publish tail's
+    // ledger/fingerprint/audit forks — runs beside a main path that can
+    // fail. Killed at each of those phases, the call must leave no
+    // branch thread running, no cache registered and no lease armed,
+    // and a retry into the same state and output dirs must converge
+    // bit-equal to the never-crashed run.
     val base = TestSpark.tmpDir("delta_pub_branch_crash")
     val clean = TestSpark.tmpDir("delta_pub_branch_ref")
-    runChain(clean, forceFull = false)
     def docs(s: Seq[(Long, String)]) = s.toDF("doc_id", "text")
-    def inc(n: Int, batch: Seq[(Long, String)]) =
-      CurationRun.runIncremental(docs(batch), benchmark,
-        s"$base/out$n", s"$base/s${n - 1}", s"$base/s$n", minQuality = 0.0,
-        embeddings = Some(emb), semThreshold = 0.9, publishSpan = 4L,
-        packBudget = 64L)
-    CurationRun.runInit(docs(initDocs), benchmark,
-      s"$base/out0", s"$base/s0", minQuality = 0.0,
+    def init(dir: String) = CurationRun.runInit(docs(initDocs), benchmark,
+      s"$dir/out0", s"$dir/s0", minQuality = 0.0,
       embeddings = Some(emb), semClusters = 2, semIters = 2,
       semThreshold = 0.9, semanticState = true, publishSpan = 4L,
-      packBudget = 64L)
-    CurationRun.publishTailProbe = {
-      case "after-carry" => throw new RuntimeException("injected crash")
-      case _ => ()
+      packBudget = 64L, spanState = true, spanMinDf = 3, lineState = true,
+      retrievalState = true)
+    def inc(dir: String, out: String, state: String) =
+      CurationRun.runIncremental(docs(inc1Docs), benchmark,
+        s"$dir/$out", s"$dir/s0", s"$dir/$state", minQuality = 0.0,
+        embeddings = Some(emb), semThreshold = 0.9, publishSpan = 4L,
+        packBudget = 64L, exactGate = true, spanMinDf = 3)
+    init(clean)
+    inc(clean, "out1", "s1")
+    init(base)
+    // localCheckpoint blocks are held weakly until GC, cache entries
+    // strongly until unpersist: count after the weak ones are gone.
+    def persistentRdds(): Int = {
+      var prev = -1
+      var n = spark.sparkContext.getPersistentRDDs.size
+      while (n != prev) {
+        prev = n
+        System.gc(); Thread.sleep(100)
+        n = spark.sparkContext.getPersistentRDDs.size
+      }
+      n
     }
-    try intercept[RuntimeException] { inc(1, inc1Docs) }
-    finally CurationRun.publishTailProbe = _ => ()
-    import scala.jdk.CollectionConverters._
-    val alive = Thread.getAllStackTraces.keySet.asScala
-      .filter(t => t.getName == "graft-state-branch" && t.isAlive)
-    assert(alive.isEmpty, s"branch threads outlived the failed call: $alive")
+    def clusters(stateDir: String) =
+      StateLayout.readState(spark, s"$stateDir/clusters").collect().toSet
     def ledger(stateDir: String) =
       StateLayout.readSlice(spark, s"$stateDir/publish_ledger_batch")
         .collect().toSet
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$base/s1/publish_ledger_batch")))
-      assert(ledger(s"$base/s1") == ledger(s"$clean/s1"),
-        "a ledger slice left by the failed call must be complete")
-    assert(!PublishState.isComplete(s"$base/out1"))
-    // The re-run converges bit-equal to the never-crashed chain.
-    inc(1, inc1Docs)
-    assert(PublishState.isComplete(s"$base/out1"))
-    assert(curatedSet(s"$base/out1") == curatedSet(s"$clean/out1") &&
-      packedSet(s"$base/out1") == packedSet(s"$clean/out1") &&
-      manifestSet(s"$base/out1") == manifestSet(s"$clean/out1"),
-      "the re-run after a crash must converge bit-equal")
-    assert(ledger(s"$base/s1") == ledger(s"$clean/s1"))
+    import scala.jdk.CollectionConverters._
+    for (phase <- Seq("batch-front", "state-block", "after-carry")) {
+      val (out, state) = (s"out1_$phase", s"s1_$phase")
+      val rddsBefore = persistentRdds()
+      val (pendingBefore, reclaimedBefore) =
+        (CacheLease.pendingCount, CacheLease.reclaimedCount)
+      CurationRun.publishTailProbe = p =>
+        if (p == phase) throw new RuntimeException(s"injected crash at $phase")
+      try intercept[RuntimeException] { inc(base, out, state) }
+      finally CurationRun.publishTailProbe = _ => ()
+      val alive = Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.getName == "graft-state-branch" && t.isAlive)
+      assert(alive.isEmpty, s"$phase: branch threads outlived the failed call: $alive")
+      assert(persistentRdds() == rddsBefore,
+        s"$phase: the failed call left cached frames registered")
+      SparkShims.waitUntilListenerBusEmpty(spark, 30000L)
+      assert(CacheLease.pendingCount <= pendingBefore &&
+        CacheLease.reclaimedCount == reclaimedBefore,
+        s"$phase: the failed call left a cache lease armed")
+      if (java.nio.file.Files.exists(
+          java.nio.file.Paths.get(s"$base/$state/publish_ledger_batch")))
+        assert(ledger(s"$base/$state") == ledger(s"$clean/s1"),
+          s"$phase: a ledger slice left by the failed call must be complete")
+      assert(!PublishState.isComplete(s"$base/$out"))
+      // The retry into the same dirs converges bit-equal.
+      inc(base, out, state)
+      assert(PublishState.isComplete(s"$base/$out"))
+      assert(clusters(s"$base/$state") == clusters(s"$clean/s1") &&
+        ledger(s"$base/$state") == ledger(s"$clean/s1") &&
+        curatedSet(s"$base/$out") == curatedSet(s"$clean/out1") &&
+        packedSet(s"$base/$out") == packedSet(s"$clean/out1") &&
+        manifestSet(s"$base/$out") == manifestSet(s"$clean/out1"),
+        s"$phase: the retry after a crash must converge bit-equal")
+    }
   }
 
   test("non-monotonic batch trips the range-premise tripwire; publish correct") {
