@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -75,6 +77,11 @@ object Bench {
     val entries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     var calMid = -1.0
+    // Generated-code compiles of the catalog passes (Spark's process-wide
+    // codegen counters): a plan shape that recompiles where it should hit
+    // the codegen cache shows here while its wall time hides in noise.
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     def runCatalog(markMid: Boolean): Seq[(String, Double, Option[String])] =
       entries.zipWithIndex.map { case ((name, fn), idx) =>
         val runs = (1 to reps).map { _ =>
@@ -132,6 +139,8 @@ object Bench {
         }
       }
     val loadPost = loadavg()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -206,6 +215,7 @@ object Bench {
     // the contract keys ({"metric","value","unit","queries","sf"}) so a
     // strict parser cannot trip on extras. The contract line is printed
     // LAST, after spark.stop(), so nothing interleaves behind it.
+    println(f"[bench] codegen compiles=$compiles compile_s=$compileS%.3f")
     println(s"""[bench] health {"errors":$errs,"failed":${results.size - ok.size},"codegen_fallbacks":$cgf,"window_global":$wg,"window_skew":$wsk,"window_bnd_overflow":$wbo,"cache_leases_reclaimed":$leases,"calibration":$cal,"loadavg":$load,"sf_dir":${jstr(sfDir)}}""")
     try spark.stop() catch { case e: Throwable =>
       System.err.println(s"[bench] stop: ${e.getMessage}")

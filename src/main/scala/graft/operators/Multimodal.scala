@@ -64,6 +64,27 @@ object Multimodal {
     }
   }
 
+  /** The one entry to `javax.imageio` here. Its stream cache is off
+    * before the first read or write: with it on (ImageIO's default)
+    * every in-memory PNG encode and decode streams through a temp file
+    * on disk instead of memory. */
+  private object Png {
+    javax.imageio.ImageIO.setUseCache(false)
+
+    def write(img: java.awt.image.RenderedImage): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "png", bos)
+      bos.toByteArray
+    }
+
+    def read(bytes: Array[Byte]): java.awt.image.BufferedImage = {
+      val img = javax.imageio.ImageIO.read(
+        new java.io.ByteArrayInputStream(bytes))
+      require(img != null, "undecodable image payload")
+      img
+    }
+  }
+
   /** Wrap a text table as fake media assets: payload = UTF-8 bytes.
     * Gives the binary-column pipeline a deterministic input that exists
     * in every test scale factor. */
@@ -137,17 +158,13 @@ object Multimodal {
         while (x < w) { img.setRGB(x, y, rgb); x += 1 }
         y += 1
       }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
+      Png.write(img)
     }
 
     /** Real PNG/JPEG decode: dimensions + band count from the decoded
       * raster itself. */
     def decodeImage(bytes: Array[Byte]): (Int, Int, Int) = {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      require(img != null, "undecodable image payload")
+      val img = Png.read(bytes)
       (img.getWidth, img.getHeight, img.getRaster.getNumBands)
     }
 
@@ -225,9 +242,7 @@ object Multimodal {
         }
         y += 1
       }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
+      Png.write(img)
     }
 
     /** Decode + EXACT average-pool to the 8x8 grid (integer sums over
@@ -236,9 +251,7 @@ object Multimodal {
       * 64-bit average-hash: bit = cell mean STRICTLY above the global
       * mean (scaled-integer compare, no float thresholds). */
     def ahashPng(bytes: Array[Byte]): Long = {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      require(img != null, "undecodable image payload")
+      val img = Png.read(bytes)
       val w = img.getWidth
       val h = img.getHeight
       require(w % 8 == 0 && h % 8 == 0, s"dims not 8-divisible: ${w}x$h")

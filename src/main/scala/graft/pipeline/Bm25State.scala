@@ -71,7 +71,7 @@ object Bm25State {
     // (concurrent first-materialization would duplicate that compute);
     // the stats write then reads it warm.
     if (recordIds) s.fork(StateLayout.writeBucketed(
-      docs.select(StateLayout.castIdStrict(col(idCol)).as("doc_id")).distinct(),
+      StateLayout.batchIds(docs, idCol),
       s"$stateOutDir/doc_ids_batch", "doc_id"))
     StateLayout.writeBucketed(postings, s"$stateOutDir/postings_batch", "tok")
     StateLayout.writeState(
@@ -124,36 +124,38 @@ object Bm25State {
         "state in one job would corrupt it")
     val lineage = StateLayout.readLineage(stateInDir)
     if (validateDisjoint) {
-      val spark = newDocs.sparkSession
       // Persisted: the probe feeds the pruned read's bucket collect
-      // AND the overlap join (the LmState discipline). Strict cast: a
-      // null-casting id would never join and silently VALIDATE
-      // (ADVICE r12).
-      val ids = newDocs
-        .select(StateLayout.castIdStrict(col(idCol)).as("doc_id"))
-        .distinct().persist()
-      try {
-        val (withIds, without) = lineage.partition(d =>
-          java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$d/doc_ids_batch")))
-        val probes =
-          (if (withIds.isEmpty) Nil
-           else Seq(StateLayout.readSlicesPruned(spark, withIds,
-             "doc_ids_batch", "doc_id", ids))) ++
-          (if (without.isEmpty) Nil
-           else Seq(StateLayout.readSlices(spark, without, "postings_batch")
-             .select(col("doc_id")).distinct()))
-        val overlap = probes.reduce(_ unionByName _)
-          .join(ids, Seq("doc_id"))
-          .limit(1).collect()
-        require(overlap.isEmpty,
-          s"writeIncrement: batch doc id ${overlap.head.get(0)} already " +
-            "exists in the composed postings state — additive composition " +
-            "would double-count its tf/df/n_docs (disjoint-id contract)")
-      } finally ids.unpersist()
+      // AND the overlap join (the LmState discipline).
+      val ids = StateLayout.batchIds(newDocs, idCol).persist()
+      try requireDisjoint(ids, lineage) finally ids.unpersist()
     }
     writeSlices(newDocs, idCol, textCol, stateOutDir, recordIds)
     StateLayout.writeLineage(stateOutDir, lineage :+ stateOutDir)
+  }
+
+  /** The disjoint-id check of [[writeIncrement]]: fails when any id of
+    * `ids` (a [[StateLayout.batchIds]] probe, persisted by the caller)
+    * is in a `lineage` slice. */
+  private[pipeline] def requireDisjoint(ids: DataFrame,
+      lineage: Seq[String]): Unit = {
+    val spark = ids.sparkSession
+    val (withIds, without) = lineage.partition(d =>
+      java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$d/doc_ids_batch")))
+    val probes =
+      (if (withIds.isEmpty) Nil
+       else Seq(StateLayout.readSlicesPruned(spark, withIds,
+         "doc_ids_batch", "doc_id", ids))) ++
+      (if (without.isEmpty) Nil
+       else Seq(StateLayout.readSlices(spark, without, "postings_batch")
+         .select(col("doc_id")).distinct()))
+    val overlap = probes.reduce(_ unionByName _)
+      .join(ids, Seq("doc_id"))
+      .limit(1).collect()
+    require(overlap.isEmpty,
+      s"writeIncrement: batch doc id ${overlap.head.get(0)} already " +
+        "exists in the composed postings state — additive composition " +
+        "would double-count its tf/df/n_docs (disjoint-id contract)")
   }
 
   /** Serve a keyword query from the composed state: postings read

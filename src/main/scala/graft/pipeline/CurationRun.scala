@@ -1079,14 +1079,8 @@ object CurationRun {
           PublishState.baseRows(
             deconNewS.select(col("doc_id"), col("text"), col("quality_score")),
             cfg).localCheckpoint(true)))
-      if (retrievalOn) {
-        s.fork(Bm25State.writeIncrement(rdocs, "doc_id", "text",
-          s"$stateInDir/bm25", s"$stateOutDir/bm25",
-          validateDisjoint = true, recordIds = true))
-        s.fork(LmState.writeIncrement(rdocs, "text",
-          s"$stateInDir/lm", s"$stateOutDir/lm",
-          validateDisjoint = true, recordIds = true))
-      }
+      if (retrievalOn)
+        forkRetrievalIncrements(s, rdocs, stateInDir, stateOutDir)
       s.fork(StateLayout.writeBucketed(
         deconNewS.select(col("doc_id"),
           TextDedup.contentHash(col("text")).as("content_hash")),
@@ -1151,6 +1145,29 @@ object CurationRun {
 
   /** The job tag every Spark job of the delta publish tail carries. */
   val DeltaPublishJobTag = "graft-delta-publish"
+
+  /** The BM25 and LM state increments of a cadence batch as two forks
+    * of `s`, each validated disjoint and recording its ids. Both check
+    * one probe that `s` persists and releases: the probe is one plan
+    * ([[StateLayout.batchIds]]) and so one CacheManager entry, and a
+    * probe per fork would be that same entry, unpersisted by whichever
+    * fork finished first while the other still read it. */
+  private[graft] def forkRetrievalIncrements(s: DriverOverlap.Scope,
+      docs: DataFrame, stateInDir: String, stateOutDir: String): Unit = {
+    val ids = StateLayout.batchIds(docs, "doc_id").persist()
+    s.release(ids.unpersist())
+    s.fork {
+      Bm25State.requireDisjoint(ids,
+        StateLayout.readLineage(s"$stateInDir/bm25"))
+      Bm25State.writeIncrement(docs, "doc_id", "text",
+        s"$stateInDir/bm25", s"$stateOutDir/bm25", recordIds = true)
+    }
+    s.fork {
+      LmState.requireDisjoint(ids, StateLayout.readLineage(s"$stateInDir/lm"))
+      LmState.writeIncrement(docs, "text",
+        s"$stateInDir/lm", s"$stateOutDir/lm", recordIds = true)
+    }
+  }
 
   /** The incremental semantic-state WRITES, extracted from the publish
     * tail (VERDICT r10 item 1): carry the frozen quantizer forward,

@@ -95,7 +95,7 @@ object LmState {
       s.fork(StateLayout.writeBucketed(m.bgCounts,
         s"$stateOutDir/bg_counts_batch", "bg"))
       if (recordIds) s.fork(StateLayout.writeBucketed(
-        docs.select(StateLayout.castIdStrict(col(idCol)).as("doc_id")).distinct(),
+        StateLayout.batchIds(docs, idCol),
         s"$stateOutDir/doc_ids_batch", "doc_id"))
       StateLayout.writeBucketed(m.prefixCounts,
         s"$stateOutDir/prefix_counts_batch", "w")
@@ -151,23 +151,8 @@ object LmState {
       // driver-side bucket collect AND the overlap join — unpersisted
       // the batch's upstream DAG would run twice here on top of
       // writeSlices' pass (round-12 review finding #4).
-      val ids = newDocs
-        .select(StateLayout.castIdStrict(col(idCol)).as("doc_id"))
-        .distinct().persist()
-      try {
-        val checkable = lineage.filter(d => java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$d/doc_ids_batch")))
-        val overlap =
-          if (checkable.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else StateLayout.readSlicesPruned(spark, checkable, "doc_ids_batch",
-              "doc_id", ids)
-            .join(ids, Seq("doc_id"))
-            .limit(1).collect()
-        require(overlap.isEmpty,
-          s"writeIncrement: batch doc id ${overlap.head.get(0)} already " +
-            "exists in the LM count state — additive composition would " +
-            "double-count its grams (disjoint-id contract)")
-      } finally ids.unpersist()
+      val ids = StateLayout.batchIds(newDocs, idCol).persist()
+      try requireDisjoint(ids, lineage) finally ids.unpersist()
     }
     writeSlices(newDocs, idCol, textCol, n, stateOutDir, recordIds)
     // Vocabulary delta: batch histories unseen anywhere in state. The
@@ -181,6 +166,25 @@ object LmState {
       Seq("w"), "left_anti").count()
     writeMeta(stateOutDir, n, vocabOf(stateInDir) + novel)
     StateLayout.writeLineage(stateOutDir, lineage :+ stateOutDir)
+  }
+
+  /** The disjoint-id check of [[writeIncrement]]: fails when any id of
+    * `ids` (a [[StateLayout.batchIds]] probe, persisted by the caller)
+    * is in a `lineage` slice that recorded its ids. */
+  private[pipeline] def requireDisjoint(ids: DataFrame,
+      lineage: Seq[String]): Unit = {
+    val checkable = lineage.filter(d => java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$d/doc_ids_batch")))
+    val overlap =
+      if (checkable.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      else StateLayout.readSlicesPruned(ids.sparkSession, checkable,
+          "doc_ids_batch", "doc_id", ids)
+        .join(ids, Seq("doc_id"))
+        .limit(1).collect()
+    require(overlap.isEmpty,
+      s"writeIncrement: batch doc id ${overlap.head.get(0)} already " +
+        "exists in the LM count state — additive composition would " +
+        "double-count its grams (disjoint-id contract)")
   }
 
   /** Score `docs` under the composed state — bit-equal to

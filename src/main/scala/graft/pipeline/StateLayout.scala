@@ -114,6 +114,13 @@ object StateLayout {
       coalesce(c.cast("string"), lit("NULL")))))
   }
 
+  /** The batch's distinct ids under [[castIdStrict]]: the plan of every
+    * `doc_ids_batch` artifact and of the disjoint-id probe. One plan, so
+    * one CacheManager entry: a caller that persists it for two
+    * consumers persists it once and shares it. */
+  def batchIds(docs: DataFrame, idCol: String): DataFrame =
+    docs.select(castIdStrict(col(idCol)).as("doc_id")).distinct()
+
   /** Bucket count a slice was written with; None = legacy layout. */
   def bucketsOf(path: String): Option[Int] = {
     val p = java.nio.file.Paths.get(path, MarkerFile)

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.execution.{UnionExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -11,6 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextAnalysis
+import graft.pipeline.CurationRun
 import graft.streaming.C4Doc
 
 /** Deliberate replica of the round-6 `GopherMeasures` bug: the JVM
@@ -53,11 +56,21 @@ case class BrokenRefArray(child: Expression) extends UnaryExpression {
   *     branch, batch);
   *   - the fused quality projection (q130's shape) runs compiled under
   *     a `MemoryStream` — the execution path the batch fixture can't
-  *     reach — with zero fallbacks (green branch, streaming).
+  *     reach — with zero fallbacks (green branch, streaming);
+  *   - generated code is REUSED: a stage compiles once whatever its
+  *     codegen stage id, and a repeated cadence increment finds its
+  *     classes in Spark's codegen cache (the `Sessions.local` settings).
   */
 class CodegenTripwireSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** Janino compiles while `body` runs (Spark's process-wide count). */
+  private def compilesOf(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
 
   test("tripwire is red on the unfixed addReferenceObj pattern") {
     val before = CodegenTripwire.fallbacks
@@ -120,4 +133,63 @@ class CodegenTripwireSpec extends AnyFunSuite {
         s"streaming gopher plan must compile, saw: ${CodegenTripwire.messages}")
     } finally q.stop()
   }
+
+  test("a stage compiles once whatever its codegen stage id") {
+    def stage = spark.range(0, 4096, 1, 2)
+      .select((col("id") * 31 + 7).as("v")).where(col("v") % 11 =!= 3)
+    // The stage under test placed after another codegen stage: the
+    // union's second child, so stage id 2.
+    val second = spark.range(0, 4096, 1, 2)
+      .select((col("id") * 13 - 5).as("v")).where(col("v") % 7 =!= 2)
+      .union(stage)
+    val idInUnion = second.queryExecution.executedPlan.collect {
+      case u: UnionExec => u.children(1) }
+      .collect { case w: WholeStageCodegenExec => w.codegenStageId }
+    assert(idInUnion == Seq(2), second.queryExecution.executedPlan)
+    second.collect()
+    val alone = stage
+    val idAlone = alone.queryExecution.executedPlan.collect {
+      case w: WholeStageCodegenExec => w.codegenStageId }
+    assert(idAlone == Seq(1), alone.queryExecution.executedPlan)
+    val n = compilesOf(alone.collect())
+    assert(n == 0, s"the same stage code under stage id 1 compiled $n classes")
+  }
+
+  test("a repeated cadence increment reuses its generated classes") {
+    def docs(s: Seq[(Long, String)]) = s.toDF("doc_id", "text")
+    val b0 = docs(Seq(
+      1L -> ("the amber lantern swung gently above wooden crates stacked " +
+        "beside narrow canal boats every misty evening"),
+      2L -> ("granite cliffs rise steeply where gulls wheel over cold grey " +
+        "water and distant sails fade slowly into the northern haze line"),
+      3L -> ("four bakers arranged warm loaves along the counter before " +
+        "sunrise brought the first customers through the door")))
+    val b1 = docs(Seq(
+      11L -> ("five gardeners planted rows of tulips beside the gravel " +
+        "path while morning light spread slowly across the lawn"),
+      12L -> ("seven sailors mended canvas sails under the harbor lamps " +
+        "as the tide pushed small boats against the wooden pier")))
+    val benchmark = docs(Seq(900L ->
+      "zyx wvu tsr qpo nml kji hgf edc ba9 87z y6x w5v u4t s3r q2p o1n"))
+    val base = TestSpark.tmpDir("codegen_reuse")
+    CurationRun.runInit(b0, benchmark, s"$base/out0", s"$base/s0",
+      minQuality = 0.0, spanState = true, lineState = true,
+      retrievalState = true)
+    // The same increment twice, each into fresh out and state dirs.
+    def increment(v: Int) = compilesOf(CurationRun.runIncremental(b1,
+      benchmark, s"$base/out$v", s"$base/s0", s"$base/s$v", minQuality = 0.0))
+    val first = increment(1)
+    val again = increment(2)
+    info(s"increment compiles: $first, then $again")
+    assert(first > MaxRecompiles)
+    assert(again <= MaxRecompiles,
+      s"a repeated increment recompiled $again of its $first classes")
+  }
+
+  /** Classes a repeated increment may still compile: measured 5 alone
+    * and in the full suite, 9 once after this spec's other cases (jobs
+    * run outside a SQL execution get a fresh executor class loader, so
+    * their classes compile again), against 383 with Spark's default
+    * codegen settings. */
+  private val MaxRecompiles = 16
 }

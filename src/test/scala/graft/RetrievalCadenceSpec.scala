@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.operators.{TextAnalysis, TextSearch}
+import graft.operators.{DriverOverlap, TextAnalysis, TextSearch}
 
 /** Cadence-wired retrieval states (VERDICT r12 item 6): `runInit(
   * retrievalState = true)` builds BM25 + LM count states over the
@@ -102,5 +102,47 @@ class RetrievalCadenceSpec extends AnyFunSuite {
       benchmark, s"$base/out4", s"$base/r", s"$base/r2", minQuality = 0.0)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$base/r2/bm25/postings_batch")))
+  }
+
+  test("the cadence's BM25 and LM increments share one id probe: " +
+      "no already-cached warning, no cache left") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val base = TestSpark.tmpDir("retrieval_probe")
+    Bm25State.writeInit(docs(b0), "doc_id", "text", s"$base/s0/bm25",
+      recordIds = true)
+    LmState.writeInit(docs(b0), "text", s"$base/s0/lm", recordIds = true)
+    // CacheManager warns when a plan it already caches is persisted
+    // again: two forks persisting one plan share one entry.
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender(
+        "retrieval-probe-cache-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage
+        if (e.getLoggerName.endsWith("CacheManager") &&
+            msg.toLowerCase.contains("already")) warnings.add(msg)
+      }
+    }
+    app.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    ctx.getConfiguration.getRootLogger.addAppender(app, Level.WARN, null)
+    ctx.updateLoggers()
+    spark.catalog.clearCache()
+    try DriverOverlap.scope { s =>
+      CurationRun.forkRetrievalIncrements(s, docs(b1), s"$base/s0",
+        s"$base/s1")
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(app.getName)
+      ctx.updateLoggers()
+      app.stop()
+    }
+    assert(warnings.isEmpty, s"CacheManager warned: $warnings")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the shared probe must be released when the scope exits")
+    assert(StateLayout.readLineage(s"$base/s1/bm25").size == 2)
+    assert(StateLayout.readLineage(s"$base/s1/lm").size == 2)
   }
 }
