@@ -593,7 +593,7 @@ object ScaleStress {
       StateLayout.writeBucketed(
         StateLayout.readSlices(spark, (0 until 4).map(i => s"$base/s$i"), "art")
           .groupBy(col("h")).agg(sum(col("n_docs")).as("n_docs")),
-        s"$base/r/art", "h", buckets = 2048, tasks = 8)
+        s"$base/r/art", "h", buckets = 2048)
       val (br, mr) = readBytes(
         StateLayout.readSlicesPruned(spark, Seq(s"$base/r"), "art", "h", batchKeys))
       val (_, mrf) = readBytes(StateLayout.readSlices(spark, Seq(s"$base/r"), "art"))

@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Session factory with the scale-aware defaults this engine assumes:
   * AQE on (runtime partition coalescing + skew-join handling), shuffle
   * partitions sized to local cores (a real cluster overrides via conf),
-  * UTC session time zone for oracle parity, and generated code that
-  * compiles once per process ([[CodegenCacheEntries]]).
+  * UTC session time zone for oracle parity, generated code that
+  * compiles once per process ([[CodegenCacheEntries]]), and local
+  * writes that fork no process ([[graft.sources.LocalFs]]).
   */
 object Sessions {
   /** Size of Spark's process-wide generated-class cache (Spark's
@@ -53,6 +54,10 @@ object Sessions {
       // neither, 481 with these names, 308 with the cache, 208 with both).
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // `file:` paths go through a local filesystem that applies
+      // permissions in-process instead of forking a `chmod` per file
+      // and dir written (sources.LocalFs).
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.LocalFs].getName)
     extraConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     // WARN, not ERROR: CodegenTripwire counts WARN-level log lines and

@@ -75,7 +75,11 @@ object StateLayout {
     * per bucket), re-derived at rebase. Measured at sf0.1 (q146): the
     * dominant LOCAL cost of the layout is per-file write commits and
     * per-dir listing, both linear in B — keep the test default modest;
-    * scale B with the data, not ahead of it. */
+    * scale B with the data, not ahead of it. On Hadoop's stock local
+    * filesystem most of that write cost was one forked `chmod` per file
+    * and per dir (`.crc` sidecars included); sessions from
+    * `Sessions.local` apply permissions in-process
+    * ([[graft.sources.LocalFs]]). */
   val DefaultBuckets = 32
 
   private val MarkerFile = "_graft_buckets"
@@ -151,11 +155,15 @@ object StateLayout {
   /** Write one state slice bucketed by `hash(keyCol) % buckets`:
     * `bucket=N/` directory layout, each bucket wholly inside one task
     * (files <= B regardless of parallelism), rows sorted by key within
-    * files. An EMPTY slice falls back to a plain single-file write —
-    * a zero-row partitionBy write lands no files at all and the
-    * read-back would have no schema to infer. */
+    * files. The shuffle by bucket has no fixed partition count, so AQE
+    * coalesces whole hash partitions to the slice's size: a
+    * batch-scale slice lands from one task, a corpus-scale one from as
+    * many as the session's shuffle parallelism. An EMPTY slice falls
+    * back to a plain single-file write — a zero-row partitionBy write
+    * lands no files at all and the read-back would have no schema to
+    * infer. */
   def writeBucketed(df: DataFrame, path: String, keyCol: String,
-      buckets: Int = DefaultBuckets, tasks: Int = 4): Unit = {
+      buckets: Int = DefaultBuckets): Unit = {
     // The layout column is synthesized here and dropped on read; a
     // DATA column sharing its name would be silently clobbered by the
     // withColumn below and lost from the slice (live near-miss: the
@@ -165,7 +173,7 @@ object StateLayout {
         "reserved for the bucketed layout; rename the data column")
     df.withColumn(BucketCol,
         bucketOf(col(keyCol), df.schema(keyCol).dataType, buckets))
-      .repartition(math.min(buckets, tasks), col(BucketCol))
+      .repartition(col(BucketCol))
       .sortWithinPartitions(col(BucketCol), col(keyCol))
       .write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(path)
     val wroteData = {

@@ -195,4 +195,34 @@ class StateLayoutSpec extends AnyFunSuite {
       assert(back.collect().toSet === df.collect().toSet)
     }
   }
+
+  test("a bucketed write lands one sorted file per bucket, from one task " +
+      "at batch scale") {
+    import org.apache.spark.sql.types.LongType
+    val dir = TestSpark.tmpDir("slayout_files")
+    // Unsorted keys spread over several input partitions.
+    val df = spark.range(0, 3000, 1, 6)
+      .select(xxhash64(col("id")).as("h"), (col("id") % 5).as("n_docs"))
+    val tasks = TestSpark.resultTasksOf(
+      StateLayout.writeBucketed(df, s"$dir/art", "h"))
+    assert(tasks.lastOption === Some(1),
+      s"a batch-scale slice's write stage must run one task: $tasks")
+    // One read; each file's rows arrive together and in file order.
+    val rows = spark.read.parquet(s"$dir/art")
+      .select(input_file_name().as("file"), col("bucket"), col("h"),
+        StateLayout.bucketOf(col("h"), LongType, StateLayout.DefaultBuckets)
+          .as("want"))
+      .as[(String, Int, Long, Int)].collect().toSeq
+    assert(rows.size === 3000)
+    val byFile = rows.groupBy(_._1)
+    assert(byFile.values.map(_.head._2).toSeq.sorted ===
+      (0 until StateLayout.DefaultBuckets),
+      "every bucket=N dir must hold exactly one file")
+    byFile.foreach { case (file, rs) =>
+      assert(rs.forall(r => r._2 == r._4),
+        s"$file holds rows of another bucket")
+      val keys = rs.map(_._3)
+      assert(keys === keys.sorted, s"$file is not sorted by key")
+    }
+  }
 }

@@ -31,27 +31,34 @@ object TestSpark {
     "spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"))
 
-  /** Spark jobs `body` launches: counted under a job tag this thread
-    * adds (driver-thread branches inherit it), after the listener bus
-    * drains. */
-  def jobsOf(body: => Unit): Int = {
+  /** Spark jobs `body` launches (see [[resultTasksOf]]). */
+  def jobsOf(body: => Unit): Int = resultTasksOf(body).size
+
+  /** The task count of each Spark job's result stage, for the jobs
+    * `body` launches, in start order: counted under a job tag this
+    * thread adds (driver-thread branches inherit it), after the
+    * listener bus drains. */
+  def resultTasksOf(body: => Unit): Seq[Int] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
     val tag = s"graft-test-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val listener = new SparkListener {
+      // A job's result stage is created after its parents: the
+      // highest stage id.
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).flatMap(p =>
             Option(p.getProperty("spark.job.tags")))
             .exists(_.split(",").contains(tag)))
-          jobs.incrementAndGet()
+          tasks.add(e.stageInfos.maxBy(_.stageId).numTasks)
     }
     sc.addSparkListener(listener)
     try {
       sc.addJobTag(tag)
       try body finally sc.removeJobTag(tag)
       org.apache.spark.graft.SparkShims.waitUntilListenerBusEmpty(spark, 30000L)
-      jobs.get()
+      tasks.asScala.toSeq
     } finally sc.removeSparkListener(listener)
   }
 
