@@ -13,7 +13,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * create by forking a `chmod` process (`Shell.execCommand`), each with
   * its own stream-reader thread. A bucketed state slice lands dozens
   * of files and dirs, and their `.crc` sidecars count too: a seed-1
-  * `curation_cadence` run forked 2,577 of them, 1,287 in its one
+  * `curation_cadence` run forked 2,560 of them, 1,287 in its one
   * increment. This filesystem sets the same mode through
   * `java.nio.file.Files` instead. Everything else, `.crc` checksums
   * included, is the stock [[LocalFileSystem]].
@@ -41,13 +41,13 @@ object LocalFs {
   class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit = {
       val file = pathToFile(p).toPath
-      val mode = try Some(Files.getAttribute(file, "unix:mode").asInstanceOf[Int])
-        catch { case _: UnsupportedOperationException => None }
-      mode match {
-        case Some(m) =>
-          Files.setAttribute(file, "unix:mode", Integer.valueOf(chmodResult(m, permission)))
+      try {
+        val mode = Files.getAttribute(file, "unix:mode").asInstanceOf[Int]
+        Files.setAttribute(file, "unix:mode",
+          Integer.valueOf(chmodResult(mode, permission)))
+      } catch {
         // A store without the unix attribute view: Hadoop's own path.
-        case None => super.setPermission(p, permission)
+        case _: UnsupportedOperationException => super.setPermission(p, permission)
       }
     }
   }
@@ -61,7 +61,7 @@ object LocalFs {
     * is `mode`: the permission and sticky bits as given; GNU chmod
     * keeps a directory's set-user-ID and set-group-ID bits under a
     * four-digit numeric mode and clears a file's. */
-  private[sources] def chmodResult(mode: Int, permission: FsPermission): Int = {
+  private def chmodResult(mode: Int, permission: FsPermission): Int = {
     val keep = if ((mode & TypeBits) == DirType) mode & SetIdBits else 0
     keep | (permission.toShort & PermBits)
   }
