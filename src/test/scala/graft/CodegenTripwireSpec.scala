@@ -190,7 +190,7 @@ class CodegenTripwireSpec extends AnyFunSuite {
   }
 
   /** Classes a repeated increment may still compile: measured 4 or 0
-    * alone, 4 or 0 after this spec's other cases, 4 in the full suite
+    * alone, 4 or 0 after this spec's other cases, 4 and 0 in the full suite
     * and 0 after the delta-publish and retrieval-cadence suites (which
     * plan variants the overlapped forks meet varies run to run), with
     * the first increment at 332 from an empty cache; against 371 with
