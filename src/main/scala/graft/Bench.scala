@@ -1,4 +1,5 @@
 package graft
+import java.lang.management.ManagementFactory
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
@@ -80,8 +81,15 @@ object Bench {
     // Generated-code compiles of the catalog passes (Spark's process-wide
     // codegen counters): a plan shape that recompiles where it should hit
     // the codegen cache shows here while its wall time hides in noise.
+    // JIT time and process CPU over the same passes say what share of
+    // the run's CPU those compiles and the JVM's own warm-up take.
+    val jit = ManagementFactory.getCompilationMXBean
+    val os = ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val compileNs0 = CodeGenerator.compileTime
+    val jitMs0 = jit.getTotalCompilationTime
+    val cpuNs0 = os.getProcessCpuTime
     def runCatalog(markMid: Boolean): Seq[(String, Double, Option[String])] =
       entries.zipWithIndex.map { case ((name, fn), idx) =>
         val runs = (1 to reps).map { _ =>
@@ -141,6 +149,8 @@ object Bench {
     val loadPost = loadavg()
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
+    val jitS = (jit.getTotalCompilationTime - jitMs0) / 1e3
+    val cpuS = (os.getProcessCpuTime - cpuNs0) / 1e9
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -215,7 +225,7 @@ object Bench {
     // the contract keys ({"metric","value","unit","queries","sf"}) so a
     // strict parser cannot trip on extras. The contract line is printed
     // LAST, after spark.stop(), so nothing interleaves behind it.
-    println(f"[bench] codegen compiles=$compiles compile_s=$compileS%.3f")
+    println(f"[bench] codegen compiles=$compiles compile_s=$compileS%.3f jit_s=$jitS%.3f cpu_s=$cpuS%.3f")
     println(s"""[bench] health {"errors":$errs,"failed":${results.size - ok.size},"codegen_fallbacks":$cgf,"window_global":$wg,"window_skew":$wsk,"window_bnd_overflow":$wbo,"cache_leases_reclaimed":$leases,"calibration":$cal,"loadavg":$load,"sf_dir":${jstr(sfDir)}}""")
     try spark.stop() catch { case e: Throwable =>
       System.err.println(s"[bench] stop: ${e.getMessage}")

@@ -6,8 +6,21 @@ import org.apache.spark.sql.SparkSession
   * AQE on (runtime partition coalescing + skew-join handling), shuffle
   * partitions sized to local cores (a real cluster overrides via conf),
   * UTC session time zone for oracle parity, generated code that
-  * compiles once per process ([[CodegenCacheEntries]]), and local
-  * writes that fork no process ([[graft.sources.LocalFs]]).
+  * compiles once per process ([[CodegenCacheEntries]]) under one
+  * executor class loader, plain UI plan strings, and local writes
+  * that fork no process ([[graft.sources.LocalFs]]).
+  *
+  * The engine is single-tenant, so two Spark defaults are turned off:
+  *  - per-session artifact isolation (a Spark Connect feature): with it
+  *    every SQL execution runs its tasks under an `ExecutorClassLoader`
+  *    of its own session, CacheManager's session clone per persist gets
+  *    a new one, each executor-side compile resolves names through it
+  *    with an RPC to the driver per miss, and a class cached under one
+  *    loader is compiled again under the next. Off, every job's tasks
+  *    use the executor's one default loader;
+  *  - the "formatted" UI explain, rendered on every SQL execution start
+  *    and every AQE plan update (hundreds per cadence run) though no
+  *    listener here reads it; the simple one is a plain tree string.
   */
 object Sessions {
   /** Size of Spark's process-wide generated-class cache (Spark's
@@ -54,6 +67,8 @@ object Sessions {
       // neither, 481 with these names, 308 with the cache, 208 with both).
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.ui.explainMode", "simple")
       // `file:` paths go through a local filesystem that applies
       // permissions in-process instead of forking a `chmod` per file
       // and dir written (sources.LocalFs).

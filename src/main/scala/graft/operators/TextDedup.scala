@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Untracked
 
 import graft.functions.TextFunctions._
 
@@ -196,9 +195,7 @@ object TextDedup {
       // 92 ms of task time). toRdd actions carry no SQL execution id,
       // so AQE adapts without posting plan updates — same result, no
       // corpus-scale cost, and the driver stays off the render path.
-      // `Untracked` keeps their tasks on the session's class loader, so
-      // their generated classes compile once per process.
-      val nEdges = Untracked(edges)(_.count())
+      val nEdges = edges.queryExecution.toRdd.count()
       if (nEdges == 0)
         return pairs.select(col("doc_a").as("doc_id"),
           col("doc_a").as("canonical_id")).where(lit(false))
@@ -255,8 +252,9 @@ object TextDedup {
     // skip the per-stage AQE plan-string render a tracked SQL action
     // pays. InternalRows from a shuffle are reused buffers — extract
     // the two longs inside the map, never hold the row.
-    Untracked(edges)(_.map(r => (r.getLong(0), r.getLong(1))).collect())
-      .foreach { case (x, y) =>
+    edges.queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .collect().foreach { case (x, y) =>
         seen += x; seen += y
         val (a, b) = (find(x), find(y))
         if (a < b) parent(b) = a else if (b < a) parent(a) = b
@@ -302,7 +300,7 @@ object TextDedup {
       .persist()
     try {
       // toRdd: internal bookkeeping count (see connectedComponents).
-      val nEdges = Untracked(contracted)(_.count())
+      val nEdges = contracted.queryExecution.toRdd.count()
       if (nEdges == 0) return ex // every new pair was already internal
       // The contracted graph is batch-sized BY CONSTRUCTION (nothing in
       // it grows with the historical corpus), so up to `driverThreshold`
@@ -846,7 +844,7 @@ object TextDedup {
     * The returned release hook unpersists them; call it in a `finally`
     * around the first eager consumer. Deliberately NOT a [[CacheLease]]:
     * the cadence's consumer ([[connectedComponentsIncremental]]) runs
-    * its internal actions through UNTRACKED `toRdd` bookkeeping (the
+    * its internal actions through `toRdd` bookkeeping (the
     * repo-wide discipline that avoids per-iteration AQE plan-string
     * rendering), which a QueryExecutionListener lease never observes —
     * tried, and the bench health counter reported every such lease as

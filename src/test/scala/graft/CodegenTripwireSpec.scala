@@ -58,8 +58,10 @@ case class BrokenRefArray(child: Expression) extends UnaryExpression {
   *     a `MemoryStream` — the execution path the batch fixture can't
   *     reach — with zero fallbacks (green branch, streaming);
   *   - generated code is REUSED: a stage compiles once whatever its
-  *     codegen stage id, and a repeated cadence increment finds its
-  *     classes in Spark's codegen cache (the `Sessions.local` settings).
+  *     codegen stage id, a plan persisted again (a new session clone)
+  *     and a repeated cadence increment find their classes in Spark's
+  *     codegen cache, and tasks compile under the executor's one
+  *     default class loader (the `Sessions.local` settings).
   */
 class CodegenTripwireSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -153,6 +155,29 @@ class CodegenTripwireSpec extends AnyFunSuite {
     assert(idAlone == Seq(1), alone.queryExecution.executedPlan)
     val n = compilesOf(alone.collect())
     assert(n == 0, s"the same stage code under stage id 1 compiled $n classes")
+  }
+
+  test("a job over a re-persisted plan reuses its generated classes") {
+    // Each persist caches through a new CacheManager session clone; the
+    // second count's tasks must still find the first count's classes.
+    def agg = spark.range(0, 4096, 1, 4)
+      .groupBy((col("id") % 17).as("k")).agg(sum(col("id") * 3).as("s"))
+    val first = agg.persist()
+    try assert(first.queryExecution.toRdd.count() == 17)
+    finally first.unpersist(blocking = true)
+    val again = agg.persist()
+    try {
+      val n = compilesOf(again.queryExecution.toRdd.count())
+      assert(n == 0, s"the re-persisted plan compiled $n classes again")
+    } finally again.unpersist(blocking = true)
+  }
+
+  test("a Dataset job's tasks run under the executor's default class loader") {
+    val loaders = spark.range(0, 8, 1, 4).mapPartitions(_ =>
+      Iterator(Thread.currentThread.getContextClassLoader.getClass.getName))
+      .collect().toSet
+    assert(!loaders.contains("org.apache.spark.executor.ExecutorClassLoader"),
+      s"task context class loaders: $loaders")
   }
 
   test("a repeated cadence increment reuses its generated classes") {
